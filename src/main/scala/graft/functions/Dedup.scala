@@ -16,17 +16,6 @@ import graft.expressions.{MinHashSignature, ShinglePairHashes, SimHash64Expr}
   */
 object Dedup {
 
-  /** Small shared daemon pool for overlapping INDEPENDENT write jobs
-    * (guide §2.6) — 2-3 jobs in flight is enough to fill a tail; actions
-    * are thread-safe on one SparkSession. */
-  private lazy val writeEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-dedup-write")
-        t.setDaemon(true)
-        t
-      }))
-
   /** Exact duplicate groups by content hash: md5 groupBy, keep the minimum
     * id as the canonical survivor. One shuffle on the 128-bit hash — the
     * text itself never shuffles when `textCol` is dropped before the agg. */
@@ -233,9 +222,7 @@ object Dedup {
         shinglePairHashes(col(textCol), shingleSize).getField("a").as("__sh"))
       .localCheckpoint(true)
     try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = writeEc
+      import graft.store.PublishProtocol.{async, await}
       // Cluster each table by its partition column before the partitioned
       // write (guide §6: "REBALANCE hint before the write"): without the
       // exchange every write task opens a file in up to nParts directories,
@@ -248,7 +235,7 @@ object Dedup {
       // (write parallelism is not capped at nParts, files stay right-sized
       // at scale). The shuffle payload is the skinny band rows / per-doc
       // shingle arrays that were about to be written anyway.
-      val bandsJob = Future {
+      val bandsJob = async(df.sparkSession) {
         hashed
           .filter(element_at(col("sig"), 1) =!= lit(Long.MaxValue))
           .withColumn("__b", explode(bandHashes(col("sig"), bands, rowsPerBand)))
@@ -257,15 +244,15 @@ object Dedup {
           .hint("rebalance", col("__hb"))
           .write.partitionBy("__hb").mode(mode).parquet(s"$path/bands")
       }
-      val docsJob = Future {
+      val docsJob = async(df.sparkSession) {
         hashed.select(col("doc_id"), col("__sh"))
           .filter(size(col("__sh")) > 0)
           .withColumn("__db", pmod(xxhash64(col("doc_id")), lit(nParts.toLong)))
           .hint("rebalance", col("__db"))
           .write.partitionBy("__db").mode(mode).parquet(s"$path/docs")
       }
-      Await.result(bandsJob, Duration.Inf)
-      Await.result(docsJob, Duration.Inf)
+      await(bandsJob)
+      await(docsJob)
     } finally graft.Housekeeping.release(hashed)
     Similarity.writeSidecar(df.sparkSession, s"$path/_lsh_params.json",
       graft.meta.JObj(Seq(

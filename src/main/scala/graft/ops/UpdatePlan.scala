@@ -1,10 +1,15 @@
 package graft.ops
 
+import java.time.{Instant, LocalDateTime}
+import java.time.temporal.ChronoUnit
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.TimestampNTZType
+
 import graft.model.TimeSpan
+import graft.store.PublishProtocol
 
 /** Update planning — classify an incoming delta against the existing store
   * (SURVEY §2.5). This is the reference's core "query".
@@ -153,55 +158,37 @@ object UpdatePlan {
       .filter(!ok)
   }
 
-  /** Update gates (utils/publish.py:730-778): updates must not precede the
-    * dataset start; appends must be contiguous with the existing end;
-    * an empty update is an error. Throws IllegalStateException on violation.
-    */
-  /** O9 gate in its single-action form: one aggregate over a classified
-    * frame carrying kinds `insert` / `append` / `existing_end` (the last
-    * being the store's end time riding in the classification job — see
-    * GridStore.existingEndFrame) computes every scalar the gate needs.
-    * The publish protocol runs this once per update; folding the counts,
-    * the first-append probe, and the store end into one driver round-trip
-    * is what keeps per-publish job counts flat. */
-  def updateQualityCheckClassified(
-      classified: DataFrame,
-      timeCol: String,
-      resolution: TimeSpan,
-      cadenceBounds: Option[(TimeSpan, TimeSpan)]): Unit = {
-    def ms(v: Any): Long = v match {
-      case l: java.lang.Long => l // already epoch millis (the compat shim)
-      case t: java.sql.Timestamp => t.getTime
-      case l: java.time.LocalDateTime => java.sql.Timestamp.valueOf(l).getTime
+  /** The update gate's scalars (see [[graft.store.PublishProtocol.checkUpdate]])
+    * in ONE aggregate action over a classified frame carrying kinds
+    * `insert` / `append` / `existing_end` (the last being the store's end
+    * time riding in the classification job — see
+    * GridStore.existingEndFrame). Folding the counts, the first-append
+    * probe, and the store end into one driver round-trip is what keeps
+    * per-publish job counts flat. An instant (TIMESTAMP) compares as its
+    * epoch, a wall time (TIMESTAMP_NTZ) as UTC wall time: neither passes
+    * through a session or JVM zone. */
+  def gateScalars(classified: DataFrame, timeCol: String): PublishProtocol.Gate = {
+    val r = classified.agg(
+      sum(when(col("kind") === "insert", 1L).otherwise(0L)),
+      sum(when(col("kind") === "append", 1L).otherwise(0L)),
+      min(when(col("kind") === "append", col(timeCol))),
+      max(when(col("kind") === "existing_end", col(timeCol))))
+      .head()
+    def n(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+    def micros(i: Int): Option[Long] = Option(r.get(i)).map {
+      case t: LocalDateTime => PublishProtocol.ldt2micros(t)
+      case t: java.sql.Timestamp => ChronoUnit.MICROS.between(Instant.EPOCH, t.toInstant)
+      case t: Instant => ChronoUnit.MICROS.between(Instant.EPOCH, t)
       case other => throw new IllegalArgumentException(s"Unexpected time value: $other")
     }
-    val r = classified.agg(
-      sum(when(col("kind") === "insert", 1L).otherwise(0L)).as("n_ins"),
-      sum(when(col("kind") === "append", 1L).otherwise(0L)).as("n_app"),
-      min(when(col("kind") === "append", col(timeCol))).as("first_app"),
-      max(when(col("kind") === "existing_end", col(timeCol))).as("existing_end"))
-      .head()
-    val nIns = Option(r.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val nApp = Option(r.get(1)).fold(0L)(_.asInstanceOf[Long])
-    if (nIns == 0 && nApp == 0)
-      throw new IllegalStateException("Update contains no new or changed records")
-    if (nApp > 0) {
-      require(r.get(3) != null, "classified frame carries no existing_end row")
-      val deltaMin = (ms(r.get(2)) - ms(r.get(3))) / 60000L
-      val contiguous = cadenceBounds match {
-        case Some((lo, hi)) => deltaMin >= lo.toMinutes && deltaMin <= hi.toMinutes
-        case None => deltaMin == resolution.toMinutes
-      }
-      if (!contiguous)
-        throw new IllegalStateException(
-          s"Append is not contiguous with existing end ${r.get(3)} " +
-            s"(gap $deltaMin min, expected ${resolution.toMinutes})")
-    }
+    PublishProtocol.Gate(n(0), n(1), micros(2), micros(3))
   }
 
-  /** Compatibility form over separate insert/append frames — delegates to
-    * [[updateQualityCheckClassified]] so there is exactly ONE copy of the
-    * gate logic. */
+  /** Update gates (utils/publish.py:730-778) over separate insert/append
+    * frames and the store's end — the scalars come from [[gateScalars]],
+    * the decision from the one copy of the gate in
+    * [[graft.store.PublishProtocol.checkUpdate]]. Throws
+    * IllegalStateException on violation. */
   def updateQualityCheck(
       spark: SparkSession,
       insertTimes: DataFrame,
@@ -210,31 +197,22 @@ object UpdatePlan {
       existingEnd: java.sql.Timestamp,
       resolution: TimeSpan,
       cadenceBounds: Option[(TimeSpan, TimeSpan)]): Unit = {
-    // Compare in EPOCH space so no zone can skew the contiguity gap — but
-    // BOTH sides must travel wall-time->epoch through the SAME convention.
-    // An LTZ column is an instant (unix_millis is zone-free) and so is the
-    // existing-end Timestamp (getTime). An NTZ column is wall time that
-    // Spark's cast interprets in the SESSION zone, while the caller's
-    // java.sql.Timestamp was built from wall time in the JVM zone
-    // (Timestamp.valueOf) — so for NTZ inputs the end literal must be
-    // re-derived from its WALL time through the same session-zone cast, or
-    // the gap skews by the session−JVM offset difference (ADVICE r9, the
-    // mirror of the LTZ bug ADVICE r8 fixed).
-    val msCol = "__time_ms"
-    def toMs(df: DataFrame, kind: String): DataFrame =
-      df.select(unix_millis(col(timeCol).cast("timestamp")).as(msCol),
-        lit(kind).as("kind"))
+    // BOTH sides must use the SAME convention. An LTZ column is an
+    // instant, and so is the existing-end Timestamp: both compare as epoch.
+    // An NTZ column is wall time, while the caller's java.sql.Timestamp was
+    // built from wall time in the JVM zone (Timestamp.valueOf) — so for NTZ
+    // inputs the end literal is its WALL time, or the gap skews by the
+    // JVM zone's offset.
     val ntz = Seq(insertTimes, appendTimes).exists(df =>
       df.schema.fields.exists(f =>
         f.name == timeCol && f.dataType == TimestampNTZType))
-    val endMs =
-      if (ntz) unix_millis(lit(existingEnd.toLocalDateTime).cast("timestamp"))
-      else lit(existingEnd.getTime)
     val end = spark.range(1).select(
-      endMs.as(msCol), lit("existing_end").as("kind"))
-    val classified = toMs(insertTimes, "insert")
-      .unionByName(toMs(appendTimes, "append"))
+      (if (ntz) lit(existingEnd.toLocalDateTime) else lit(existingEnd)).as(timeCol),
+      lit("existing_end").as("kind"))
+    def kind(df: DataFrame, k: String) = df.select(col(timeCol), lit(k).as("kind"))
+    val classified = kind(insertTimes, "insert")
+      .unionByName(kind(appendTimes, "append"))
       .unionByName(end)
-    updateQualityCheckClassified(classified, msCol, resolution, cadenceBounds)
+    PublishProtocol.checkUpdate(gateScalars(classified, timeCol), resolution, cadenceBounds)
   }
 }

@@ -2,14 +2,18 @@ package graft.store
 
 import java.nio.charset.StandardCharsets
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 
-import graft.model.{DatasetDescriptor, TimeSpan, TimeUnitKind}
+import graft.meta.JObj
+import graft.model.{DatasetDescriptor, TimeUnitKind}
 import graft.ops.UpdatePlan
+import graft.store.PublishProtocol.{Gate, Planned, Summary}
 
 /** Incremental grid store on bucket-partitioned parquet — the Spark-native
   * re-expression of the reference's Zarr write engine
@@ -27,6 +31,11 @@ import graft.ops.UpdatePlan
   * Scale notes (100 TB): all data paths are single `df.write` jobs — no
   * driver-side row handling. The only driver I/O is the attrs sidecar (a few
   * KB of JSON via the Hadoop FS API, so file:// and s3a:// behave alike).
+  *
+  * The guard, gate, commit marker and attrs assembly are the shared
+  * [[PublishProtocol]]; this layout supplies the attrs sidecar, one stats
+  * aggregate plus one gate aggregate (overlapped with the padding read) as
+  * its planning, and the dynamic bucket overwrite as its write.
   */
 final class GridStore(
     val spark: SparkSession,
@@ -55,15 +64,10 @@ final class GridStore(
       * change the profile is a full rebuild ([[writeInitial]] /
       * `publish(rebuild = true)`), which rewrites every data file and so
       * adopts the constructor's key. */
-    val encryptionKeyHash: Option[String] = None) extends GridPublisher {
+    val encryptionKeyHash: Option[String] = None) extends PublishProtocol {
 
   // fail at construction, with the hash named, not mid-publish
   encryptionKeyHash.foreach(graft.functions.Encryption.requireKey)
-
-  /** [[GridPublisher]] — one streaming micro-batch lands through the same
-    * publish dispatch. */
-  override def publishBatch(update: DataFrame): Unit = publish(update)
-
 
   import GridStore._
 
@@ -129,17 +133,18 @@ final class GridStore(
           s"$kh:${dataCols.filterNot(_ == "__bucket").mkString(",")}")
     }
 
-  /** Directory-key expression for the time bucket. */
-  private def bucketExpr = {
-    val pattern = bucketSpan match {
-      case TimeUnitKind.Days => "yyyy-MM-dd"
-      case TimeUnitKind.Months => "yyyy-MM"
-      case TimeUnitKind.Years => "yyyy"
-      case other => throw new IllegalArgumentException(
-        s"Unsupported bucket span: $other (use days/months/years)")
-    }
-    date_format(col(timeCol), pattern)
+  /** Date pattern of the time bucket's directory key; bucket strings sort
+    * chronologically. */
+  private def bucketPattern: String = bucketSpan match {
+    case TimeUnitKind.Days => "yyyy-MM-dd"
+    case TimeUnitKind.Months => "yyyy-MM"
+    case TimeUnitKind.Years => "yyyy"
+    case other => throw new IllegalArgumentException(
+      s"Unsupported bucket span: $other (use days/months/years)")
   }
+
+  /** Directory-key expression for the time bucket. */
+  private def bucketExpr = date_format(col(timeCol), bucketPattern)
 
   // ------------------------------------------------------------- existence
 
@@ -177,13 +182,7 @@ final class GridStore(
     * predicate for row-group pruning within the edge buckets. */
   def readRange(start: java.time.LocalDateTime,
       end: java.time.LocalDateTime): DataFrame = {
-    val fmtStr = bucketSpan match {
-      case TimeUnitKind.Days => "yyyy-MM-dd"
-      case TimeUnitKind.Months => "yyyy-MM"
-      case TimeUnitKind.Years => "yyyy"
-      case other => throw new IllegalArgumentException(s"Unsupported: $other")
-    }
-    val fmt = java.time.format.DateTimeFormatter.ofPattern(fmtStr)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern(bucketPattern)
     encryptedRead.parquet(dataPath)
       .filter(col("__bucket") >= start.format(fmt) &&
         col("__bucket") <= end.format(fmt))
@@ -197,83 +196,13 @@ final class GridStore(
   def attrsPath: String = s"$path/_graft_metadata/attrs.json"
   private def dataPath: String = s"$path/data"
 
-  /** Attrs sidecar as the full JSON AST — provider metadata is arbitrarily
-    * nested JSON in the reference (store.py:26-46's encoder); nested values
-    * survive read-modify-write untouched. */
-  def readAttrsJson(): graft.meta.JObj = {
-    val fs = fileSystem(spark, path)
-    val p = new HPath(attrsPath)
-    if (!fs.exists(p)) graft.meta.JObj(Seq.empty)
-    else {
-      val in = fs.open(p)
-      try graft.meta.JValue.parse(
-          new String(in.readAllBytes(), StandardCharsets.UTF_8)) match {
-        case o: graft.meta.JObj => o
-        case _ => graft.meta.JObj(Seq.empty)
-      }
-      finally in.close()
-    }
-  }
+  /** The attrs sidecar (W8). */
+  def readAttrsJson(): JObj = readJsonDoc(attrsPath).getOrElse(JObj(Seq.empty))
 
-  def writeAttrsJson(attrs: graft.meta.JObj): Unit = {
-    val fs = fileSystem(spark, path)
-    val out = fs.create(new HPath(attrsPath), true)
+  def writeAttrsJson(attrs: JObj): Unit = {
+    val out = fileSystem(spark, path).create(new HPath(attrsPath), true)
     try out.write(attrs.render.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** Nested-safe partial update: only the given keys change. */
-  def patchAttrsJson(patch: Map[String, graft.meta.JValue]): Unit =
-    writeAttrsJson(patch.toSeq.sortBy(_._1).foldLeft(readAttrsJson()) {
-      case (o, (k, v)) => o.updated(k, v)
-    })
-
-  /** Metadata-only read of the attrs sidecar as flat strings
-    * (store.py:200-247) — string values verbatim, nested values rendered
-    * to compact JSON (so flat consumers keep working over nested docs). */
-  def readAttrs(): Map[String, String] =
-    readAttrsJson().fields.map { case (k, v) =>
-      k -> (v match {
-        case graft.meta.JStr(s) => s
-        case other => other.render
-      })
-    }.toMap
-
-  def writeAttrs(attrs: Map[String, String]): Unit =
-    writeAttrsJson(graft.meta.JObj(
-      attrs.toSeq.sortBy(_._1).map { case (k, v) => k -> graft.meta.JStr(v) }))
-
-  /** W8 partial update: patch only the given keys, preserving the rest —
-    * including NESTED values of untouched keys; the failure path must
-    * never clobber unrelated attrs (publish.py:211-266). */
-  def patchAttrs(patch: Map[String, String]): Unit =
-    patchAttrsJson(patch.map { case (k, v) => k -> (graft.meta.JStr(v): graft.meta.JValue) })
-
-  // --------------------------------------------------- commit marker (W6)
-
-  /** W10 — refuse to plan an update while another writer is in flight;
-    * strict string "true" mirrors the reference's strict `is True`
-    * (publish.py:358-375). */
-  def checkNotInProgress(): Unit =
-    if (readAttrs().get(UpdateInProgressKey).contains("true"))
-      throw new IllegalStateException(
-        s"Store at $path has update_in_progress=true; refusing concurrent update")
-
-  /** W6 — the mini write-ahead protocol around every data write: set the
-    * in-progress flag, run the write, then persist the full post-write
-    * attrs with the flag cleared; on failure clear ONLY the flag
-    * (publish.py:155-268). */
-  private def withCommitMarker(postAttrs: => Map[String, String])(write: => Unit): Unit = {
-    patchAttrs(Map(UpdateInProgressKey -> "true"))
-    try {
-      write
-      // patch (not read++write-all): nested attrs of untouched keys survive
-      patchAttrs(postAttrs + (UpdateInProgressKey -> "false"))
-    } catch {
-      case e: Throwable =>
-        patchAttrs(Map(UpdateInProgressKey -> "false"))
-        throw e
-    }
   }
 
   // -------------------------------------------------------------- writes
@@ -317,9 +246,9 @@ final class GridStore(
     * store). */
   private def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-  /** W3 — initial write (publish.py:301-318). */
-  def writeInitial(df: DataFrame, dryRun: Boolean = false): Unit = {
-    if (dryRun) return
+  /** W3 — initial write (publish.py:301-318): the encryption profile, the
+    * attrs stats aggregate started alongside the write, and the write. */
+  protected def planInitial(df: DataFrame): Planned = {
     // A full (re)build rewrites EVERY data file, so it is the one path
     // that may change the profile: an explicit constructor key is adopted
     // (encrypting a plaintext store, or rotating an encrypted one);
@@ -350,22 +279,13 @@ final class GridStore(
       else Map.empty
     // Overlap the attrs stats aggregate with the data write (guide §2.6):
     // both read df independently, and the aggregate's scalars are only
-    // consumed AFTER the write succeeds (withCommitMarker evaluates
-    // postAttrs lazily) — so the formerly-serial stats job now back-fills
-    // while the write's tail drains. A failed write just abandons the
-    // (read-only) stats future.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
-    val statsF = Future {
-      spark.sparkContext.setJobDescription("graft.store: initial attrs stats")
-      try updateStats(df)
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    withCommitMarker(computedAttrs(df, isUpdate = false,
-        Some(Await.result(statsF, Duration.Inf))) ++ rotation) {
-      writeJob(df, "overwrite")
-    }
+    // consumed AFTER the write succeeds (the protocol reads the summary
+    // after the write) — so the formerly-serial stats job back-fills while
+    // the write's tail drains. A failed write just abandons the
+    // (read-only) stats job.
+    val stats = PublishProtocol.async(spark)(label("initial attrs stats")(updateStats(df)))
+    new Planned(PublishProtocol.await(stats).summary,
+      () => label("initial write")(writeJob(df, "overwrite")), attrs = rotation)
   }
 
   /** Pad the delta back to bucket completeness with `combineFirst` (J3,
@@ -375,23 +295,23 @@ final class GridStore(
     * the touched buckets FIRST, so the full-outer join never sees the rest
     * of the store. When padding applies, the result is MATERIALIZED here
     * (read-only — severs lineage from the store files the write will
-    * replace), so [[runUpdate]] can run this job CONCURRENTLY with the
-    * quality gate (guide §2.6). Returns (frame, wasPadded) — a padded
-    * frame's checkpoint blocks are the caller's to release after the
-    * write lands. */
-  private def paddedDelta(df: DataFrame, touched: Set[String]): (DataFrame, Boolean) = {
+    * replace), so [[planUpdate]] can run this job CONCURRENTLY with the
+    * gate's aggregate (guide §2.6). Returns the padded frame, None when
+    * no touched bucket exists yet — its checkpoint blocks are the caller's
+    * to release after the write lands. */
+  private def paddedDelta(df: DataFrame, touched: Set[String]): Option[DataFrame] = {
     val overlap = existingBuckets.intersect(touched)
-    if (overlap.isEmpty) (df, false)
+    if (overlap.isEmpty) None
     else {
       // partition-pruned: only the overlapping bucket dirs are listed
       val original = readBuckets(overlap)
       val keys = desc.standardDims.filter(df.columns.contains)
-      (materialize(UpdatePlan.combineFirst(df, original, keys, desc.dataVar)), true)
+      Some(materialize(UpdatePlan.combineFirst(df, original, keys, desc.dataVar)))
     }
   }
 
   // W4 + W5 note: the delta write itself is ONE dynamic-partition-overwrite
-  // job (see runUpdate), because dynamic overwrite replaces touched buckets
+  // job (see planUpdate), because dynamic overwrite replaces touched buckets
   // (inserts, publish.py:406-450) and creates brand-new ones (appends,
   // publish.py:452-478) in the same pass.
 
@@ -412,26 +332,10 @@ final class GridStore(
     }
   }
 
-  /** W2 — publish dispatch (publish.py:86-129): initial when nothing
-    * exists (or rebuilding), else classify + insert + append. */
-  def publish(
-      update: DataFrame,
-      rebuild: Boolean = false,
-      allowOverwrite: Boolean = true,
-      dryRun: Boolean = false): Unit = {
-    if (!hasExisting || rebuild) {
-      if (hasExisting && rebuild && !allowOverwrite)
-        throw new IllegalStateException(
-          "Rebuild of an existing store requires allowOverwrite " +
-            "(publish.py:342-348 semantics)")
-      writeInitial(update, dryRun)
-    } else runUpdate(update, dryRun)
-  }
-
-  /** Update path (publish.py:322-356): guard, classify times, gate, insert
-    * per region, then append. */
-  private def runUpdate(updateDf0: DataFrame, dryRun: Boolean): Unit = {
-    checkNotInProgress()
+  /** Update planning (publish.py:322-356): one stats aggregate, then the
+    * gate's aggregate overlapped with the padding read; the write is one
+    * dynamic bucket overwrite. */
+  protected def planUpdate(updateDf0: DataFrame, dryRun: Boolean): (Gate, Planned) = {
     // Materialize the delta ONCE: classification, gate checks, bucket
     // discovery, and both write paths all re-read it, and its lineage may be
     // an arbitrary upstream pipeline. An update is a bounded delta relative
@@ -441,76 +345,49 @@ final class GridStore(
     // materializes the blocks as it folds — an eager checkpoint was a
     // whole extra job per publish.
     val updateDf = updateDf0.localCheckpoint(false)
-    // Classification only needs the store's times INSIDE the update window
-    // (a time can only be an insert if both sides contain it), so the
-    // existing side is a bucket-pruned range read — never a full-store
-    // scan, even of just the time column. The ONE updateStats action also
-    // serves attrs assembly and bucket planning below.
-    val stats = updateStats(updateDf)
-    // The gate's ONE aggregate action, scoped so `classified` — whose plan
-    // reads the CURRENT store files — cannot gain a post-write consumer
-    // (the write below replaces those files; a later read of this frame
-    // would be the read-after-replace bug the r15-dropped defensive
-    // checkpoint used to paper over). StoreGateOrderSpec pins the ordering
-    // at the job level. `classified` is one row per distinct update
-    // timestep plus ONE `existing_end` row — the store's last-bucket max
-    // time rides in the same job instead of its own scan action.
-    def runGate(): Unit = {
-      val existing = readRange(stats.uLo, stats.uHi)
-      val classified =
-        UpdatePlan.classifyUpdateTimes(existing, updateDf, timeCol)
-          .unionByName(existingEndFrame)
-      spark.sparkContext.setJobDescription("graft.store: update gate")
-      try UpdatePlan.updateQualityCheckClassified(classified, timeCol,
-        desc.timeResolution, desc.updateCadenceBounds)
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    if (dryRun) {
-      runGate()
-      graft.Housekeeping.release(updateDf)
-      return
-    }
-    // Overlap the gate with the padding read (guide §2.6): both are
-    // INDEPENDENT read-only jobs over pre-write store files — the gate's
-    // aggregate and the combine-first materialization — and both must
-    // finish before the data write. Running the padding job on the shared
-    // store pool lets its tasks back-fill executors while the gate's
-    // (driver-latency-bound) aggregate round-trips; job descriptions are
-    // thread-local so the ordering spec can tell them apart. The gate
-    // still completes BEFORE any write: writeJob runs only after both the
-    // Await and a successful gate.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
-    val padF = Future {
-      spark.sparkContext.setJobDescription("graft.store: padding read")
-      try paddedDelta(updateDf, stats.touched)
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    val gateOutcome = scala.util.Try(runGate())
-    // the padding job must complete either way — a failed gate must not
-    // leave its checkpoint job racing a caller's retry
-    val padOutcome = scala.util.Try(Await.result(padF, Duration.Inf))
-    gateOutcome.failed.foreach { e =>
-      padOutcome.foreach { case (padded, wasPadded) =>
-        if (wasPadded) graft.Housekeeping.release(padded)
-      }
-      graft.Housekeeping.release(updateDf)
-      throw e
-    }
-    val (padded, wasPadded) = padOutcome.get
+    // the combine-first frame, when padding applies; released with the delta
+    var padded: Option[DataFrame] = None
+    val release = () => (padded.toSeq :+ updateDf).foreach(graft.Housekeeping.release)
     try {
-      withCommitMarker(computedAttrs(updateDf, isUpdate = true, Some(stats))) {
-        spark.sparkContext.setJobDescription("graft.store: delta write")
-        try writeJob(padded, "overwrite", dynamic = true)
-        finally spark.sparkContext.setJobDescription(null)
+      // Classification only needs the store's times INSIDE the update
+      // window (a time can only be an insert if both sides contain it), so
+      // the existing side is a bucket-pruned range read — never a
+      // full-store scan, even of just the time column. The ONE updateStats
+      // action also serves attrs assembly and bucket planning below.
+      val stats = label("update stats")(updateStats(updateDf))
+      // The gate's ONE aggregate action, scoped so `classified` — whose
+      // plan reads the CURRENT store files — cannot gain a post-write
+      // consumer (the write replaces those files). The protocol spec pins
+      // the ordering at the job level. `classified` is one row per
+      // distinct update timestep plus ONE `existing_end` row — the store's
+      // last-bucket max time rides in the same job instead of its own scan
+      // action.
+      def gate(): Gate = label("update gate") {
+        val existing = readRange(stats.uLo, stats.uHi)
+        UpdatePlan.gateScalars(
+          UpdatePlan.classifyUpdateTimes(existing, updateDf, timeCol)
+            .unionByName(existingEndFrame), timeCol)
       }
-    } finally {
-      // every consumer (gate, padding, write) has run: the update delta's
-      // (and the padded frame's) checkpoint blocks are dead
-      if (wasPadded) graft.Housekeeping.release(padded)
-      graft.Housekeeping.release(updateDf)
-    }
+      val g =
+        // an empty update has no time bounds: the gate refuses it as is
+        if (stats.uLo == null) Gate(0, 0, None, None)
+        else if (dryRun) gate()
+        else {
+          // Overlap the gate with the padding read (guide §2.6): both are
+          // INDEPENDENT read-only jobs over pre-write store files, and both
+          // finish before the protocol decides the gate, so both precede
+          // any write.
+          val padF = PublishProtocol.async(spark)(
+            label("padding read")(paddedDelta(updateDf, stats.touched)))
+          val g = Try(gate())
+          // the padding job must complete either way — a failed gate must
+          // not leave its checkpoint job racing a caller's retry
+          padded = PublishProtocol.await(padF)
+          g.get
+        }
+      (g, new Planned(stats.summary, () => label("delta write")(
+        writeJob(padded.getOrElse(updateDf), "overwrite", dynamic = true)), release))
+    } catch { case e: Throwable => release(); throw e }
   }
 
   // ------------------------------------------------------------- helpers
@@ -543,37 +420,13 @@ final class GridStore(
       .toSet
   }
 
-  /** W14 — attrs assembly after a write (metadata.py:870-921): date range,
-    * update range, previous end, append-only flag, bbox when the frame
-    * carries lat/lon spatial dims. */
-  /** One multi-aggregate over the update frame serving EVERY scalar the
-    * publish protocol needs — raw time bounds (classification window),
-    * formatted date range + bbox (attrs assembly), and the touched bucket
-    * set (dynamic-overwrite planning). Folding these into a single action
-    * is what keeps the per-publish driver job count flat: each extra
-    * scalar round-trip is protocol latency, not data volume. */
-  private[store] final case class UpdateStats(
-      uLo: java.time.LocalDateTime, uHi: java.time.LocalDateTime,
-      lo: String, hi: String,
-      bbox: Option[(Double, Double, Double, Double)],
-      touched: Set[String])
-
-  private def hasBboxCols(df: DataFrame): Boolean = {
-    val spatial = desc.spatialDims.take(2)
-    spatial.length == 2 && spatial.forall(df.columns.contains) &&
-      spatial == Seq("latitude", "longitude")
-  }
-
   private def updateStats(df: DataFrame): UpdateStats = {
-    val fmt = "yyyyMMddHH"
-    val hasBbox = hasBboxCols(df)
+    val withBbox = hasBbox && Seq("latitude", "longitude").forall(df.columns.contains)
     val aggs = Seq(
       min(col(timeCol).cast(TimestampNTZType)).as("raw_lo"),
       max(col(timeCol).cast(TimestampNTZType)).as("raw_hi"),
-      date_format(min(col(timeCol)), fmt).as("lo"),
-      date_format(max(col(timeCol)), fmt).as("hi"),
       collect_set(bucketExpr).as("touched")) ++
-      (if (hasBbox) Seq(
+      (if (withBbox) Seq(
         round(min(col("longitude")), desc.bboxRounding).as("bb0"),
         round(min(col("latitude")), desc.bboxRounding).as("bb1"),
         round(max(col("longitude")), desc.bboxRounding).as("bb2"),
@@ -583,50 +436,15 @@ final class GridStore(
     UpdateStats(
       uLo = r.getAs[java.time.LocalDateTime]("raw_lo"),
       uHi = r.getAs[java.time.LocalDateTime]("raw_hi"),
-      lo = r.getAs[String]("lo"), hi = r.getAs[String]("hi"),
-      bbox = if (!hasBbox) None
+      bbox = if (!withBbox) None
         else Some((r.getAs[Double]("bb0"), r.getAs[Double]("bb1"),
           r.getAs[Double]("bb2"), r.getAs[Double]("bb3"))),
       touched = r.getAs[Seq[String]]("touched").toSet)
   }
-
-  private def computedAttrs(df: DataFrame, isUpdate: Boolean,
-      pre: Option[UpdateStats] = None): Map[String, String] = {
-    val stats = pre.getOrElse(updateStats(df))
-    val (lo, hi) = (stats.lo, stats.hi)
-    val prior = readAttrs() // one sidecar read serves bbox merge + ranges
-    val bboxAttrs = stats.bbox match {
-      case None => Map.empty[String, String]
-      case Some((bb0, bb1, bb2, bb3)) =>
-        // union-extend the prior bbox (metadata.py bbox merge semantics)
-        val merged = prior.get("bbox") match {
-          case Some(old) if isUpdate =>
-            val o = old.split(",").map(_.toDouble)
-            Seq(math.min(o(0), bb0), math.min(o(1), bb1),
-              math.max(o(2), bb2), math.max(o(3), bb3))
-          case _ => Seq(bb0, bb1, bb2, bb3)
-        }
-        Map("bbox" -> merged.mkString(","))
-    }
-    val start = if (isUpdate) prior.getOrElse("date_range_start", lo) else lo
-    val priorEnd = prior.get("date_range_end")
-    val end = priorEnd.filter(_ > hi).getOrElse(hi)
-    Map(
-      "dataset_name" -> desc.datasetName,
-      "data_var" -> desc.dataVar,
-      "time_resolution" -> desc.timeResolution.toString,
-      "date_range_start" -> start,
-      "date_range_end" -> end,
-      "update_date_range_start" -> lo,
-      "update_date_range_end" -> hi,
-      "update_is_append_only" -> (!isUpdate).toString,
-      "update_previous_end_date" -> priorEnd.getOrElse(""),
-    ) ++ bboxAttrs ++ desc.staticMetadata
-  }
 }
 
 object GridStore {
-  val UpdateInProgressKey = "update_in_progress"
+  val UpdateInProgressKey: String = PublishProtocol.UpdateInProgressKey
 
   /** Attrs key persisting the store's master-key hash (never the key) —
     * the parquet analog of the zarr filter chain's key_hash config. */
@@ -640,9 +458,19 @@ object GridStore {
       "org.apache.parquet.crypto.keytools.PropertiesDrivenCryptoFactory",
     "parquet.encryption.kms.client.class" -> "graft.store.GraftKmsClient")
 
+  /** One multi-aggregate over the update frame serving EVERY scalar the
+    * layout's planning needs — time bounds (classification window and
+    * attrs date range), bbox (attrs), and the touched bucket set
+    * (dynamic-overwrite planning). Folding these into a single action is
+    * what keeps the per-publish driver job count flat: each extra scalar
+    * round-trip is protocol latency, not data volume. */
+  private final case class UpdateStats(
+      uLo: java.time.LocalDateTime, uHi: java.time.LocalDateTime,
+      bbox: Option[(Double, Double, Double, Double)],
+      touched: Set[String]) {
+    def summary: Summary = Summary(uLo, uHi, bbox)
+  }
+
   def fileSystem(spark: SparkSession, path: String): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  // The attrs sidecar codec is the shared graft.meta JSON AST (nested
-  // values first-class, store.py:26-46 parity); see read/writeAttrsJson.
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 
-import graft.meta.{JObj, JStr, JValue}
+import graft.meta.{JObj, JStr}
 import graft.model.DatasetDescriptor
 import graft.sources.zarr.{ZarrCodec, ZarrIO, ZarrMeta}
 import graft.sources.zarr.ZarrMeta.ZArrayMeta
+import graft.store.PublishProtocol.{Gate, Planned, Summary, ldt2micros, micros2ldt}
 
 /** Incremental grid store in the reference's NATIVE format: a Zarr
   * directory store (v2 `.zattrs`/`.zarray` by default, v3 `zarr.json` on
@@ -29,8 +30,10 @@ import graft.sources.zarr.ZarrMeta.ZArrayMeta
   *    a chunk boundary (publish.py:520-553, Aligning_update_chunks.md);
   *  - **insert** overlays rows onto existing chunk bytes for only the
   *    chunks that receive rows (`region=` writes, publish.py:406-450);
-  *  - both run under the update_in_progress commit-marker protocol
-  *    (publish.py:155-268) carried in the root `.zattrs`.
+  *  - both run under the shared [[PublishProtocol]] — guard, update gate,
+  *    commit marker and attrs carried in the root `.zattrs` (or
+  *    `zarr.json`). Its planning scalars come from the driver-held axes
+  *    the layout reads anyway, so the gate and attrs add no Spark job.
   *
   * Scale: the data path is `ZarrIO.writeDataChunks` — one shuffle keyed by
   * chunk id, each chunk wholly owned by one task, untouched chunks never
@@ -74,18 +77,13 @@ final class ZarrStore(
       * profile fails with both named rather than being silently ignored
       * (re-key via [[StoreConvert.rechunkZarr]], which rewrites every
       * chunk). */
-    val encryptionKeyHash: Option[String] = None) extends GridPublisher {
+    val encryptionKeyHash: Option[String] = None) extends PublishProtocol {
 
   require(zarrFormat == 2 || zarrFormat == 3, s"zarr format $zarrFormat (2 or 3)")
   require(shardChunks.isEmpty || zarrFormat == 3,
     "sharding_indexed is a zarr v3 codec — shardChunks needs zarrFormat = 3")
   // fail at construction, with the hash named, not mid-publish
   encryptionKeyHash.foreach(graft.functions.Encryption.requireKey)
-
-  /** [[GridPublisher]] — one streaming micro-batch lands through the same
-    * publish dispatch (appends must stay time-monotonic, which ordered
-    * micro-batches are by construction). */
-  override def publishBatch(update: DataFrame): Unit = publish(update)
 
   import ZarrStore._
 
@@ -136,20 +134,7 @@ final class ZarrStore(
 
   // ----------------------------------------------------------- attrs (W8)
 
-  private def readJsonFile(rel: String): Option[JObj] = {
-    val fs = GridStore.fileSystem(spark, path)
-    val p = new HPath(s"$path/$rel")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try JValue.parse(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)) match {
-        case o: JObj => Some(o)
-        case _ => None
-      }
-      finally in.close()
-    }
-  }
+  private def readJsonFile(rel: String): Option[JObj] = readJsonDoc(s"$path/$rel")
 
   /** Root attributes, format-agnostic: a v3 store's live in `zarr.json`'s
     * "attributes" member, a v2 store's in `.zattrs`. */
@@ -160,17 +145,9 @@ final class ZarrStore(
         .getOrElse(JObj(Seq.empty))
     else readJsonFile(".zattrs").getOrElse(JObj(Seq.empty))
 
-  def readAttrs(): Map[String, String] =
-    readAttrsJson().fields.map { case (k, v) =>
-      k -> (v match { case JStr(s) => s; case other => other.render })
-    }.toMap
-
-  def patchAttrs(patch: Map[String, String]): Unit = {
-    val updated = patch.toSeq.sortBy(_._1).foldLeft(readAttrsJson()) {
-      case (o, (k, v)) => o.updated(k, JStr(v))
-    }
+  def writeAttrsJson(attrs: JObj): Unit =
     if (useV3) {
-      // patch the "attributes" member in place; the rest of zarr.json
+      // replace the "attributes" member in place; the rest of zarr.json
       // (node_type, consolidated_metadata, …) is preserved verbatim. An
       // initial v3 publish patches the commit marker in before any other
       // metadata exists — seed a minimal group document.
@@ -178,13 +155,12 @@ final class ZarrStore(
         "zarr_format" -> graft.meta.JNum(3),
         "node_type" -> JStr("group"))))
       ZarrIO.writeUtf8(conf, s"$path/zarr.json",
-        doc.updated("attributes", updated).render)
+        doc.updated("attributes", attrs).render)
     } else {
-      ZarrIO.writeUtf8(conf, s"$path/.zattrs", updated.render)
+      ZarrIO.writeUtf8(conf, s"$path/.zattrs", attrs.render)
       // keep the consolidated doc in sync (readers do ONE metadata fetch)
-      refreshConsolidated(updated)
+      refreshConsolidated(attrs)
     }
-  }
 
   private def refreshConsolidated(rootAttrs: JObj): Unit = {
     val arrays = listArrays()
@@ -205,56 +181,12 @@ final class ZarrStore(
     }
     else fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
       val name = st.getPath.getName
-      val za = new HPath(s"$path/$name/.zarray")
-      if (!fs.exists(za)) None
-      else {
-        val in = fs.open(za)
-        val doc = try JValue.parse(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
-        val attrsP = new HPath(s"$path/$name/.zattrs")
-        val attrs =
-          if (!fs.exists(attrsP)) JObj(Seq.empty)
-          else {
-            val ain = fs.open(attrsP)
-            try JValue.parse(new String(ain.readAllBytes(),
-                java.nio.charset.StandardCharsets.UTF_8)) match {
-              case o: JObj => o
-              case _ => JObj(Seq.empty)
-            }
-            finally ain.close()
-          }
-        Some(name -> ZarrMeta.parseZArray(doc, attrs))
-      }
-    }
-  }
-
-  // --------------------------------------------------- commit marker (W6)
-
-  def checkNotInProgress(): Unit =
-    if (readAttrs().get(GridStore.UpdateInProgressKey).contains("true"))
-      throw new IllegalStateException(
-        s"Zarr store at $path has update_in_progress=true; refusing concurrent update")
-
-  private def withCommitMarker(postAttrs: => Map[String, String])(write: => Unit): Unit = {
-    patchAttrs(Map(GridStore.UpdateInProgressKey -> "true"))
-    try {
-      write
-      patchAttrs(postAttrs + (GridStore.UpdateInProgressKey -> "false"))
-    } catch {
-      case e: Throwable =>
-        patchAttrs(Map(GridStore.UpdateInProgressKey -> "false"))
-        throw e
+      readJsonFile(s"$name/.zarray").map(doc => name -> ZarrMeta.parseZArray(doc,
+        readJsonFile(s"$name/.zattrs").getOrElse(JObj(Seq.empty))))
     }
   }
 
   // -------------------------------------------------------------- writes
-
-  /** W2 — publish dispatch (publish.py:86-129). Updates run against either
-    * metadata format — the persisted format decides every key and document
-    * convention (see [[useV3]]). */
-  def publish(update: DataFrame, rebuild: Boolean = false): Unit =
-    if (!hasExisting || rebuild) writeInitial(update)
-    else writeUpdate(update)
 
   /** The key hash a data-array document declares, wherever its chain
     * carries it (v2 `EncryptionFilter` or the v3 codec chain, inside any
@@ -305,7 +237,7 @@ final class ZarrStore(
 
   /** W3 — initial write: axes from the frame, metadata + coords from the
     * driver, data chunks distributed. */
-  def writeInitial(df: DataFrame): Unit = {
+  protected def planInitial(df: DataFrame): Planned = {
     checkEncryptionProfile()
     // Capture the persisted array document BEFORE the rebuild delete
     // removes it: a keyless rebuild of an encrypted store keeps the
@@ -316,35 +248,29 @@ final class ZarrStore(
       persisted.flatMap(encryptionHashOf)
         .foreach(graft.functions.Encryption.requireKey)
     val (timeMicros, spatialVals) = collectAxes(df)
-    withCommitMarker(Map(
-      "dataset_name" -> desc.datasetName,
-      "data_var" -> desc.dataVar) ++ desc.staticMetadata) {
+    new Planned(summary(timeMicros, spatialVals), () => {
       // a rebuild must not leave stale chunks behind: an all-fill chunk of
       // the new grid is simply never written, so an old chunk there would
       // resurface as data (publish.py's rebuild overwrites the whole store)
       GridStore.fileSystem(spark, path)
         .delete(new HPath(s"$path/${desc.dataVar}"), true)
       writeAxesAndMeta(persisted, timeMicros, spatialVals)
-      ZarrIO.writeDataChunks(spark, path,
-        axes = axisKeys(timeMicros, spatialVals),
-        vars = Seq((desc.dataVar, desc.dataVar,
-          dataMeta(persisted, timeMicros.length, spatialVals))),
-        df = df, mergeExisting = false)
-    }
+      writeChunks(persisted, timeMicros, spatialVals, df, merge = false)
+    })
   }
 
   /** W4 + W5 — unified update: appended times extend the axis (driver-side
     * coord rewrite), then ONE merge job overlays all update rows onto the
     * touched chunks — the tail chunk butt-join and region inserts are the
-    * same read-modify-write. */
-  private def writeUpdate(df0: DataFrame): Unit = {
-    checkNotInProgress()
+    * same read-modify-write. The gate's scalars come from the update's and
+    * the store's axes, which planning holds on the driver anyway. */
+  protected def planUpdate(df0: DataFrame, dryRun: Boolean): (Gate, Planned) = {
     checkEncryptionProfile()
-    val persisted = persistedDataMeta
-    val existingTime = readTimeAxisMicros()
-    val existingSet = existingTime.toSet
-    // Materialize the delta ONCE (r16, mirroring GridStore.runUpdate): the
-    // two axis-planning jobs and the chunk write all re-read it, and its
+    val arrays = listArrays().toMap
+    val persisted = arrays.get(desc.dataVar)
+    val existingTime = readTimeAxisMicros(arrays)
+    // Materialize the delta ONCE (as GridStore.planUpdate does): the
+    // axis-planning jobs and the chunk write all re-read it, and its
     // lineage may be an arbitrary upstream pipeline — previously each
     // consumer re-evaluated that pipeline (3 evaluations per update). An
     // update is a bounded delta relative to the store, so this is an
@@ -354,40 +280,59 @@ final class ZarrStore(
     // dataset, where column-pruned re-scans beat materializing every
     // column (the axis jobs read one column each).
     val df = df0.localCheckpoint(false)
-    val (updateTime, spatialVals) = collectAxes(df)
-    val appended = updateTime.filterNot(existingSet)
-    // appends must extend the axis monotonically; anything else is an insert
-    // into existing coordinates (publish.py:359-377's insert/append split)
-    appended.headOption.foreach { first =>
-      require(first > existingTime.last,
-        s"Update time ${micros2ldt(first)} is neither an existing coordinate " +
-          s"nor after the store end ${micros2ldt(existingTime.last)} — " +
-          "zarr axes cannot interleave new points (reference raises the same)")
-    }
-    val newTime = existingTime ++ appended
-    val spatialAxes = readSpatialAxes()
-    // update rows must land on the existing spatial grid
-    spatialVals.zip(spatialAxes.map(_._2)).zip(nonTimeDims).foreach {
-      case ((got, have), dim) =>
-        val haveSet = have.toSet
-        val missing = got.filterNot(haveSet)
-        require(missing.isEmpty,
-          s"Update has $dim values off the existing grid: ${missing.take(3).mkString(",")}")
-    }
-    try withCommitMarker(Map(
-      "update_date_range_start" -> micros2ldt(updateTime.head).toString,
-      "update_date_range_end" -> micros2ldt(updateTime.last).toString)) {
-      if (appended.nonEmpty)
-        writeAxesAndMeta(persisted, newTime, spatialAxes.map(_._2))
-      ZarrIO.writeDataChunks(spark, path,
-        axes = axisKeys(newTime, spatialAxes.map(_._2)),
-        vars = Seq((desc.dataVar, desc.dataVar,
-          dataMeta(persisted, newTime.length, spatialAxes.map(_._2)))),
-        df = df, mergeExisting = true)
-    } finally
-      // every consumer (axis jobs, chunk write) has run — or the publish
-      // failed: either way the delta's checkpoint blocks are dead
-      graft.Housekeeping.release(df)
+    // every consumer (axis jobs, chunk write) has run — or the publish
+    // failed: either way the delta's checkpoint blocks are dead
+    val release = () => graft.Housekeeping.release(df)
+    try {
+      val (updateTime, spatialVals) = collectAxes(df)
+      val existingSet = existingTime.toSet
+      val appended = updateTime.filterNot(existingSet)
+      // appends must extend the axis monotonically; anything else is an
+      // insert into existing coordinates (publish.py:359-377's
+      // insert/append split). Checked before the shared gate: an
+      // interleaved point is refused as such, not as a cadence gap.
+      appended.headOption.foreach { first =>
+        require(first > existingTime.last,
+          s"Update time ${micros2ldt(first)} is neither an existing coordinate " +
+            s"nor after the store end ${micros2ldt(existingTime.last)} — " +
+            "zarr axes cannot interleave new points (reference raises the same)")
+      }
+      val spatialAxes = readSpatialAxes(arrays)
+      // update rows must land on the existing spatial grid
+      spatialVals.zip(spatialAxes).zip(nonTimeDims).foreach {
+        case ((got, have), dim) =>
+          val haveSet = have.toSet
+          val missing = got.filterNot(haveSet)
+          require(missing.isEmpty,
+            s"Update has $dim values off the existing grid: ${missing.take(3).mkString(",")}")
+      }
+      val gate = Gate(updateTime.length - appended.length, appended.length,
+        appended.headOption, existingTime.lastOption)
+      val newTime = existingTime ++ appended
+      (gate, new Planned(summary(updateTime, spatialVals), () => {
+        if (appended.nonEmpty)
+          writeAxesAndMeta(persisted, newTime, spatialAxes)
+        writeChunks(persisted, newTime, spatialAxes, df, merge = true)
+      }, release))
+    } catch { case e: Throwable => release(); throw e }
+  }
+
+  /** Attrs scalars from driver-held axes (sorted, distinct): the time
+    * bounds and, for lat/lon grids, the bbox rounded as Spark's `round`
+    * would (HALF_UP). */
+  private def summary(timeMicros: Array[Long], spatial: Seq[Array[Double]]): Summary = {
+    def axis(dim: String) = spatial(nonTimeDims.indexOf(dim))
+    def rounded(v: Double) =
+      if (v.isNaN || v.isInfinite) v
+      else BigDecimal(v).setScale(desc.bboxRounding, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val bbox =
+      if (!hasBbox || timeMicros.isEmpty) None
+      else {
+        val (lat, lon) = (axis("latitude"), axis("longitude"))
+        Some((rounded(lon.head), rounded(lat.head), rounded(lon.last), rounded(lat.last)))
+      }
+    Summary(timeMicros.headOption.map(micros2ldt).orNull,
+      timeMicros.lastOption.map(micros2ldt).orNull, bbox)
   }
 
   // ------------------------------------------------------------- internals
@@ -412,35 +357,40 @@ final class ZarrStore(
           "bound. A zarr grid axis is a coordinate, not a key; for " +
           "high-cardinality dimensions use the parquet GridStore layout " +
           "(bucketed, no dense axis) or coarsen the dimension")
-    // the per-axis planning jobs are INDEPENDENT — submit them from a
-    // small pool so they overlap (guide §2.6) instead of paying one
-    // scheduler round-trip per dimension sequentially (r15); each job's
-    // semantics (distinct → orderBy → bounded collect) are unchanged
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
-    val tF = Future {
+    // the per-axis planning jobs are INDEPENDENT — submit them to the
+    // protocol's helper threads so they overlap (guide §2.6) instead of
+    // paying one scheduler round-trip per dimension sequentially;
+    // each job's semantics (distinct → orderBy → bounded collect) are
+    // unchanged
+    def axisJob[T](body: => T) =
+      PublishProtocol.async(spark)(label("axis plan")(body))
+    val tF = axisJob {
       val rows = df.select(col(timeCol).cast(TimestampNTZType)).distinct()
         .orderBy(timeCol).limit(MaxAxisLength + 1).collect()
       bounded(timeCol, rows.length)
       rows.map(r => ldt2micros(r.getAs[java.time.LocalDateTime](0)))
     }
     val spatialF = nonTimeDims.map { d =>
-      Future {
+      axisJob {
         val rows = df.select(col(d).cast("double")).distinct()
           .orderBy(d).limit(MaxAxisLength + 1).collect()
         bounded(d, rows.length)
         rows.map(_.getDouble(0))
       }
     }
-    (Await.result(tF, Duration.Inf),
-      spatialF.map(Await.result(_, Duration.Inf)))
+    (PublishProtocol.await(tF), spatialF.map(PublishProtocol.await(_)))
   }
 
-  private def axisKeys(timeMicros: Array[Long],
-      spatial: Seq[Array[Double]]): Seq[(String, Array[Double])] =
-    (timeCol -> timeMicros.map(_.toDouble)) +:
-      nonTimeDims.zip(spatial)
+  /** The one distributed data write: `df`'s rows into the chunks of the
+    * grid spanned by the given axes, merged into existing chunk bytes on
+    * update. */
+  private def writeChunks(persisted: Option[ZArrayMeta], timeMicros: Array[Long],
+      spatial: Seq[Array[Double]], df: DataFrame, merge: Boolean): Unit =
+    label("chunk write")(ZarrIO.writeDataChunks(spark, path,
+      axes = (timeCol -> timeMicros.map(_.toDouble)) +: nonTimeDims.zip(spatial),
+      vars = Seq((desc.dataVar, desc.dataVar,
+        dataMeta(persisted, timeMicros.length, spatial))),
+      df = df, mergeExisting = merge))
 
   /** Chunk shape is FIXED at store creation (zarr permits chunks larger
     * than the current shape, so the time chunk stays `timeChunk` even when
@@ -585,74 +535,47 @@ final class ZarrStore(
     refreshConsolidated(readAttrsJson())
   }
 
-  private def readTimeAxisMicros(): Array[Long] = {
-    val arrays = listArrays().toMap
-    val meta = arrays.getOrElse(timeCol,
-      throw new IllegalStateException(s"Store at $path has no $timeCol axis"))
+  /** One coordinate array's values, decoded on the driver (coords are
+    * KB-scale; the same [[MaxAxisLength]] bound as `collectAxes`). */
+  private def readAxis(arrays: Map[String, ZArrayMeta],
+      dim: String): (ZArrayMeta, Array[Double]) = {
+    val meta = arrays.getOrElse(dim,
+      throw new IllegalStateException(s"Store at $path has no $dim axis"))
     require(meta.shape.head <= MaxAxisLength,
-      s"$timeCol axis of ${meta.shape.head} values exceeds the driver-held " +
+      s"$dim axis of ${meta.shape.head} values exceeds the driver-held " +
         s"planning bound $MaxAxisLength (see collectAxes)")
+    val n = meta.shape.head
+    val out = new Array[Double](n)
+    var c = 0
+    val chunk = meta.chunks.head
+    while (c * chunk < n) {
+      val buf = ZarrMeta.readChunk(conf, meta,
+        Some(ZarrMeta.FileChunk(s"$path/$dim/${meta.chunkKey(Seq(c))}"))).get
+      var i = 0
+      while (i < chunk && c * chunk + i < n) {
+        out(c * chunk + i) = meta.dtype.decodeDouble(buf, i)
+        i += 1
+      }
+      c += 1
+    }
+    (meta, out)
+  }
+
+  private def readTimeAxisMicros(arrays: Map[String, ZArrayMeta]): Array[Long] = {
+    val (meta, raw) = readAxis(arrays, timeCol)
     // honor the persisted CF units — a store written by other tooling
     // typically encodes "hours/days since <epoch>", not raw epoch-micros
     val (mult, epoch) = meta.attr("units")
       .flatMap(graft.sources.nc.NcFormat.parseTimeUnits)
       .getOrElse((1L, 0L))
-    val n = meta.shape.head
-    val out = new Array[Long](n)
-    var c = 0
-    val chunk = meta.chunks.head
-    while (c * chunk < n) {
-      val buf = ZarrMeta.readChunk(conf, meta,
-        Some(ZarrMeta.FileChunk(s"$path/$timeCol/${meta.chunkKey(Seq(c))}"))).get
-      var i = 0
-      while (i < chunk && c * chunk + i < n) {
-        out(c * chunk + i) = meta.dtype.decodeDouble(buf, i).toLong * mult + epoch
-        i += 1
-      }
-      c += 1
-    }
-    out
+    raw.map(_.toLong * mult + epoch)
   }
 
-  private def readSpatialAxes(): Seq[(String, Array[Double])] = {
-    val arrays = listArrays().toMap
-    nonTimeDims.map { dim =>
-      val meta = arrays.getOrElse(dim,
-        throw new IllegalStateException(s"Store at $path has no $dim axis"))
-      require(meta.shape.head <= MaxAxisLength,
-        s"$dim axis of ${meta.shape.head} values exceeds the driver-held " +
-          s"planning bound $MaxAxisLength (see collectAxes)")
-      val n = meta.shape.head
-      val out = new Array[Double](n)
-      var c = 0
-      val chunk = meta.chunks.head
-      while (c * chunk < n) {
-        val buf = ZarrMeta.readChunk(conf, meta,
-          Some(ZarrMeta.FileChunk(s"$path/$dim/${meta.chunkKey(Seq(c))}"))).get
-        var i = 0
-        while (i < chunk && c * chunk + i < n) {
-          out(c * chunk + i) = meta.dtype.decodeDouble(buf, i)
-          i += 1
-        }
-        c += 1
-      }
-      dim -> out
-    }
-  }
+  private def readSpatialAxes(arrays: Map[String, ZArrayMeta]): Seq[Array[Double]] =
+    nonTimeDims.map(readAxis(arrays, _)._2)
 }
 
 object ZarrStore {
-
-  /** Small shared daemon pool for the independent per-axis planning jobs
-    * (guide §2.6); axes are few (≤ a handful of dims), so 3 threads is
-    * plenty to overlap them. */
-  private[store] lazy val axisEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
-        val t = new Thread(r, "graft-zarr-axes")
-        t.setDaemon(true)
-        t
-      }))
 
   /** CF time units for the store's time axis. MICROSECOND resolution — the
     * update path compares the frame's epoch-micros timestamps against the
@@ -667,10 +590,4 @@ object ZarrStore {
     * ~20× hourly-ERA5-since-1940 headroom, far below driver OOM. */
   val MaxAxisLength: Int = 1 << 24
 
-  def ldt2micros(t: java.time.LocalDateTime): Long =
-    t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000
-
-  def micros2ldt(m: Long): java.time.LocalDateTime =
-    java.time.LocalDateTime.ofEpochSecond(m / 1000000L,
-      ((m % 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
 }

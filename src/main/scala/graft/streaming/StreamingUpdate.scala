@@ -27,14 +27,14 @@ object StreamingUpdate {
     * insert/append protocol. */
   def attach(
       stream: DataFrame,
-      store: graft.store.GridPublisher,
+      store: graft.store.PublishProtocol,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.publishBatch(batch)
+        if (!batch.isEmpty) store.publish(batch)
       }
       .start()
 

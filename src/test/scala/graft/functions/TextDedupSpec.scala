@@ -393,6 +393,35 @@ class TextDedupSpec extends SparkSpec {
     assert(o2.map(_.getLong(2)).toSeq == Seq(5L, 5L))
   }
 
+  test("lshIndexWrite jobs carry the caller's local properties") {
+    val root = java.nio.file.Files.createTempDirectory("lsh_props").toString
+    val corpus = (0 until 20).map(i => (i.toLong, s"doc $i token$i other$i words"))
+      .toDF("doc_id", "text")
+    // the helper threads must exist BEFORE the property is set: a pooled
+    // thread that merely inherited the property at creation proves nothing
+    Dedup.lshIndexWrite(corpus, "doc_id", "text", s"$root/warm", nParts = 2)
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val tagged = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tagged.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.caller"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.caller", tag)
+    try {
+      Dedup.lshIndexWrite(corpus, "doc_id", "text", s"$root/idx", nParts = 2)
+      Thread.sleep(500) // listener bus drain
+    } finally {
+      sc.setLocalProperty("graft.test.caller", null)
+      sc.removeSparkListener(listener)
+    }
+    val seen = tagged.toArray(Array.empty[Option[String]]).toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_.contains(tag)),
+      s"${seen.count(!_.contains(tag))} of ${seen.size} jobs lacked the caller's property")
+  }
+
   test("lshIndexWrite → lshProbeNearDups: equals nearDupPairs restricted to index×batch; pruned scans; append grows") {
     val root = java.nio.file.Files.createTempDirectory("lsh_idx").toString
     val path = s"$root/idx"

@@ -117,16 +117,6 @@ class GridStoreSpec extends SparkSpec {
     assertThrows[IllegalStateException](store.publish(dailyGrid(4, 1)))
   }
 
-  test("rebuild requires allowOverwrite") {
-    val store = newStore()
-    store.publish(dailyGrid(1, 3))
-    assertThrows[IllegalStateException] {
-      store.publish(dailyGrid(1, 3), rebuild = true, allowOverwrite = false)
-    }
-    store.publish(dailyGrid(1, 4), rebuild = true)
-    assert(store.dataset().count() == 16)
-  }
-
   test("attrs sidecar round-trips escapes AND nested JSON; flat patch preserves nesting") {
     import graft.meta._
     val store = newStore()
