@@ -4,10 +4,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.SparkSession
 
 /** Measurement harness (guide §1): run named [[SparkEntry.queries]] with a
-  * listener that prints per-job wall time, stage counts, task counts and
-  * shuffle bytes — the local-mode substitute for the Spark UI's job table
-  * (the UI is disabled in the bench contract). Dev-only; the bench and
-  * verify surfaces are untouched.
+  * listener that prints per-job wall time, stage counts, task counts,
+  * summed task run and deserialize time, and shuffle bytes — the
+  * local-mode substitute for the Spark UI's job table (the UI is disabled
+  * in the bench contract). Dev-only; the bench and verify surfaces are
+  * untouched.
   *
   * {{{ runMain graft.ProfileQuery <sfDir> <q1,q2,…> }}} */
 object ProfileQuery {
@@ -28,7 +29,8 @@ object ProfileQuery {
 
     final case class JobRow(id: Int, desc: String, start: Long,
       var end: Long = -1L, var stages: Int = 0, var tasks: Int = 0,
-      var shufWrite: Long = 0L, var shufRead: Long = 0L, var input: Long = 0L)
+      var shufWrite: Long = 0L, var shufRead: Long = 0L, var input: Long = 0L,
+      var runMs: Long = 0L, var deserMs: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
@@ -53,6 +55,10 @@ object ProfileQuery {
             r.shufWrite += m.shuffleWriteMetrics.bytesWritten
             r.shufRead += m.shuffleReadMetrics.totalBytesRead
             r.input += m.inputMetrics.bytesRead
+            // task shipping: a job whose tasks deserialize longer than
+            // they run pays for what its closures carry, not for work
+            r.runMs += m.executorRunTime
+            r.deserMs += m.executorDeserializeTime
           }
         }
       }
@@ -70,6 +76,7 @@ object ProfileQuery {
       rows.foreach { r =>
         val ms = if (r.end < 0) -1L else r.end - r.start
         println(f"  job ${r.id}%3d ${ms}%6d ms  stages ${r.stages}%2d tasks ${r.tasks}%4d " +
+          f"run ${r.runMs}%6d ms  deser ${r.deserMs}%6d ms  " +
           f"in ${r.input / 1024}%8d KiB  sw ${r.shufWrite / 1024}%6d KiB  " +
           f"sr ${r.shufRead / 1024}%6d KiB  ${r.desc.take(60)}%s")
       }

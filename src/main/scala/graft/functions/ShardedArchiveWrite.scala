@@ -24,7 +24,6 @@ private[functions] object ShardedArchiveWrite {
     * no-op) — the raw stream is closed by the protocol. */
   def run[S](
       rdd: org.apache.spark.rdd.RDD[((Long, String, String), Array[Byte])],
-      conf: graft.sources.nc.SerializableHadoopConf,
       dir: String,
       prefix: String,
       suffix: String,
@@ -34,6 +33,7 @@ private[functions] object ShardedArchiveWrite {
       writeOne: (S, String, String, Array[Byte]) => Unit,
       finish: S => Unit): Unit = {
     require(nShards >= 1, s"nShards $nShards")
+    val conf = graft.sources.BroadcastConf(rdd.sparkContext.hadoopConfiguration)
     val parted = rdd.repartitionAndSortWithinPartitions(
       new org.apache.spark.Partitioner {
         override def numPartitions: Int = nShards

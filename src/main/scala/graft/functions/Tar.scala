@@ -363,8 +363,6 @@ object Tar {
       nShards: Int,
       gzip: Boolean = false): Unit = {
     import org.apache.spark.sql.functions._
-    val conf = new graft.sources.nc.SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     val keyed = df.select(
         pmod(xxhash64(col(keyCol)), lit(nShards.toLong)).as("__shard"),
         col(keyCol).cast("string").as("__key"),
@@ -375,7 +373,7 @@ object Tar {
           r.getAs[Array[Byte]](3))
       }
     ShardedArchiveWrite.run[java.io.OutputStream](
-      keyed, conf, dir, "shard", if (gzip) ".tar.gz" else ".tar", nShards,
+      keyed, dir, "shard", if (gzip) ".tar.gz" else ".tar", nShards,
       "webdataset",
       raw => if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw,
       (sink, key, ext, payload) => writeEntry(sink, s"$key.$ext", payload),

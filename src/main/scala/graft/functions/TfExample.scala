@@ -324,8 +324,6 @@ object TfExample {
     import org.apache.spark.sql.functions._
     require(bytesCols.nonEmpty || int64Cols.nonEmpty || floatListCols.nonEmpty,
       "no feature columns")
-    val conf = new graft.sources.nc.SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     val nBytes = bytesCols.length
     val nInts = int64Cols.length
     val keyed = df.select(
@@ -365,7 +363,7 @@ object TfExample {
         ((r.getLong(0), r.getString(1), ""), TfExample.encode(feats))
       }
     ShardedArchiveWrite.run[java.io.OutputStream](
-      keyed, conf, dir, "shard", ".tfrecord", nShards, "tfrecord",
+      keyed, dir, "shard", ".tfrecord", nShards, "tfrecord",
       raw => raw,
       (sink, _, _, payload) => sink.write(TfRecord.encode(Seq(payload))),
       _ => ())

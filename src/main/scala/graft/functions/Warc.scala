@@ -554,8 +554,6 @@ object Warc {
       gzipPerRecord: Boolean = true,
       warcDate: String = "2024-01-01T00:00:00Z"): Unit = {
     import org.apache.spark.sql.functions._
-    val conf = new graft.sources.nc.SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     val keyed = df.select(
         pmod(xxhash64(col(uriCol)), lit(nShards.toLong)).as("__shard"),
         col(uriCol).cast("string").as("__uri"),
@@ -565,7 +563,7 @@ object Warc {
           r.getString(2).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
     ShardedArchiveWrite.run[java.io.OutputStream](
-      keyed, conf, dir, "segment", if (gzipPerRecord) ".warc.gz" else ".warc",
+      keyed, dir, "segment", if (gzipPerRecord) ".warc.gz" else ".warc",
       nShards, "wet",
       raw => raw, // members are self-contained; no stream-level wrapper
       (sink, uri, _, payload) => {

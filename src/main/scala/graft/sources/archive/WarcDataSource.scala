@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Warc
-import graft.sources.nc.SerializableHadoopConf
+import graft.sources.BroadcastConf
 
 /** DataSource V2 batch reader for WARC archives —
   * `spark.read.format("warc").load(dirOrFile)` over `.warc` /
@@ -177,8 +177,10 @@ final class WarcScan(table: WarcTable, required: StructType)
       }
     }.toArray
 
+  private lazy val taskConf = BroadcastConf(table.conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(new SerializableHadoopConf(table.conf))
+    new WarcReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes = table.files.map(_._2).sum
@@ -192,7 +194,7 @@ final case class WarcInputPartition(
     codec: String, // "none" | "gz" | "zst" — per-record member layouts
     maxMemberBytes: Long, cols: Array[String]) extends InputPartition
 
-final class WarcReaderFactory(conf: SerializableHadoopConf)
+final class WarcReaderFactory(conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition], conf.value)

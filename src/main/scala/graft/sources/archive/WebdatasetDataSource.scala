@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Tar
-import graft.sources.nc.SerializableHadoopConf
+import graft.sources.BroadcastConf
 
 /** DataSource V2 batch reader for WebDataset shards —
   * `spark.read.format("webdataset").load(dirOrFile)` over `.tar` /
@@ -181,8 +181,10 @@ final class WebdatasetScan(table: WebdatasetTable, required: StructType)
       partitionsOfFile(path, len)
     }.toArray
 
+  private lazy val taskConf = BroadcastConf(table.conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new WebdatasetReaderFactory(new SerializableHadoopConf(table.conf))
+    new WebdatasetReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes = table.files.map(_._2).sum
@@ -196,7 +198,7 @@ final case class WebdatasetInputPartition(
     gz: Boolean, nRanges: Int, maxMemberBytes: Long,
     cols: Array[String]) extends InputPartition
 
-final class WebdatasetReaderFactory(conf: SerializableHadoopConf)
+final class WebdatasetReaderFactory(conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     if (partition.asInstanceOf[WebdatasetInputPartition].gz)

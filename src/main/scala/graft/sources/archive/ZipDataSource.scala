@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Zip
-import graft.sources.nc.SerializableHadoopConf
+import graft.sources.BroadcastConf
 
 /** DataSource V2 batch reader for ZIP archives —
   * `spark.read.format("zip").load(dirOrFile)`: one row per member.
@@ -232,8 +232,10 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
       ZipTable.isZipName, table.maxFilesPerTrigger,
       partitionsForStream, createReaderFactory())
 
+  private lazy val taskConf = BroadcastConf(table.conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZipReaderFactory(new SerializableHadoopConf(table.conf))
+    new ZipReaderFactory(taskConf)
 
   /** EXACT stats — the directory is an index. */
   override def estimateStatistics(): Statistics = new Statistics {
@@ -251,7 +253,7 @@ final case class ZipInputPartition(
     path: String, fileLen: Long, members: Seq[Zip.Central],
     cols: Array[String]) extends InputPartition
 
-final class ZipReaderFactory(conf: SerializableHadoopConf)
+final class ZipReaderFactory(conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ZipPartitionReader(partition.asInstanceOf[ZipInputPartition], conf.value)

@@ -16,7 +16,8 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.nc.{NcScan, SerializableHadoopConf}
+import graft.sources.BroadcastConf
+import graft.sources.nc.NcScan
 import GribFormat.GribMessage
 
 /** DataSource V2 batch reader for GRIB editions 1 AND 2 (regular lat/lon
@@ -406,23 +407,26 @@ final class GribScan(
   }
 
   // lazy: description(), planInputPartitions(), and estimateStatistics()
-  // all consult it — filter the message set once per scan, not per call
+  // all consult them — filter, pack and broadcast once per scan, not per
+  // call (a micro-batch stream asks for a reader factory every trigger)
   private lazy val survivors: Seq[(String, GribMessage)] =
     byFile.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
+  private lazy val packed = GribSplit.pack(survivors)
+  private lazy val taskConf = BroadcastConf(conf)
 
   override def description(): String =
     s"graft-grib1 messages=${survivors.length}/${byFile.map(_._2.length).sum}, " +
-      s"splits=${GribSplit.pack(survivors).length}, " +
+      s"splits=${packed.length}, " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    GribSplit.pack(survivors).map { case (p, ms) =>
+    packed.map { case (p, ms) =>
       GribInputPartition(p, ms, required.fieldNames)
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GribReaderFactory(new SerializableHadoopConf(conf))
+    new GribReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows = survivors.map(_._2.nValues.toLong).sum
@@ -451,11 +455,13 @@ private[grib] object GribSplit {
 
   def pack(survivors: Seq[(String, GribMessage)]): Seq[(String, Seq[GribMessage])] = {
     if (survivors.isEmpty) return Seq.empty
-    val openCost = graft.sources.SplitBudget.openCostInBytes
-    // open cost charges once per FILE (messages of one file share the
-    // stream), exactly like Spark's file-granular charging
+    // the open cost charges once per FILE (messages of one file share the
+    // stream) into the total that sizes the budget, not into the file's
+    // first bin: with maxSplit equal to the open cost (any small archive)
+    // that charge filled the bin alone, and a one-split file planned two
     val totalBytes = survivors.map { case (_, m) => msgBytes(m) }.sum +
-      survivors.iterator.map(_._1).distinct.size * openCost
+      survivors.iterator.map(_._1).distinct.size *
+        graft.sources.SplitBudget.openCostInBytes
     val maxSplit = graft.sources.SplitBudget.maxSplitBytes(totalBytes)
     val out = Seq.newBuilder[(String, Seq[GribMessage])]
     var curPath: String = null
@@ -467,7 +473,7 @@ private[grib] object GribSplit {
       cur = List.newBuilder[GribMessage]; curBytes = 0L; curEmpty = true
     }
     survivors.foreach { case (p, m) =>
-      val cost = msgBytes(m) + (if (p != curPath) openCost else 0L)
+      val cost = msgBytes(m)
       if (p != curPath || (!curEmpty && curBytes + cost > maxSplit)) flush()
       curPath = p
       cur += m; curBytes += cost; curEmpty = false
@@ -477,7 +483,7 @@ private[grib] object GribSplit {
   }
 }
 
-final class GribReaderFactory(conf: SerializableHadoopConf)
+final class GribReaderFactory(private[grib] val conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GribPartitionReader(partition.asInstanceOf[GribInputPartition], conf.value)

@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.nc.{NcScan, SerializableHadoopConf}
+import graft.sources.BroadcastConf
+import graft.sources.nc.NcScan
 import GribFormat.GribMessage
 
 /** DataSource V2 batch reader for SPECTRAL GRIB2 fields (grid template
@@ -232,20 +233,22 @@ final class GribSpectralScan(
 
   private lazy val survivors: Seq[(String, GribMessage)] =
     byFile.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
+  private lazy val packed = GribSplit.pack(survivors)
+  private lazy val taskConf = BroadcastConf(conf)
 
   override def description(): String =
     s"graft-grib-spectral messages=${survivors.length}/${byFile.map(_._2.length).sum}, " +
-      s"splits=${GribSplit.pack(survivors).length}, " +
+      s"splits=${packed.length}, " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    GribSplit.pack(survivors).map { case (p, ms) =>
+    packed.map { case (p, ms) =>
       GribInputPartition(p, ms, required.fieldNames)
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GribSpectralReaderFactory(new SerializableHadoopConf(conf))
+    new GribSpectralReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows = survivors.map(_._2.nValues.toLong).sum
@@ -255,7 +258,7 @@ final class GribSpectralScan(
   }
 }
 
-final class GribSpectralReaderFactory(conf: SerializableHadoopConf)
+final class GribSpectralReaderFactory(conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GribSpectralPartitionReader(

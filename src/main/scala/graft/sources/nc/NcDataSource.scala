@@ -564,8 +564,10 @@ final class NcScan(
   override def planInputPartitions(): Array[InputPartition] =
     layouts.flatMap(partitionsFor).toArray
 
+  private lazy val taskConf = graft.sources.BroadcastConf(conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new NcReaderFactory(new SerializableHadoopConf(conf))
+    new NcReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows: Long = layouts.flatMap(prunedRanges).map {
@@ -728,22 +730,7 @@ final case class NcInputPartition(
     cols: Array[NcColSpec],
     recSize: Long) extends InputPartition
 
-/** Hadoop Configuration is not Serializable; ship it via its own writable
-  * form (the standard connector pattern). */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-final class NcReaderFactory(conf: SerializableHadoopConf)
+final class NcReaderFactory(conf: graft.sources.BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new NcPartitionReader(partition.asInstanceOf[NcInputPartition], conf.value)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.nc.SerializableHadoopConf
+import graft.sources.BroadcastConf
 import TiffFormat.TiffRaster
 
 /** DataSource V2 batch reader for GeoTIFF / cloud-optimized GeoTIFF
@@ -459,8 +459,10 @@ final class TiffScan(
 
   override def planInputPartitions(): Array[InputPartition] = survivors.toArray
 
+  private lazy val taskConf = BroadcastConf(conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new TiffReaderFactory(new SerializableHadoopConf(conf))
+    new TiffReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows = survivors.map { p =>
@@ -490,7 +492,7 @@ final case class TiffInputPartition(
     bands: Array[Int],
     cols: Array[String]) extends InputPartition
 
-final class TiffReaderFactory(conf: SerializableHadoopConf)
+final class TiffReaderFactory(conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TiffPartitionReader(partition.asInstanceOf[TiffInputPartition], conf.value)

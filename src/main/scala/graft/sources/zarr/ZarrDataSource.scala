@@ -15,7 +15,8 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.nc.{Axis, IndexAxis, NumAxis, SerializableHadoopConf, TimeAxis}
+import graft.sources.BroadcastConf
+import graft.sources.nc.{Axis, IndexAxis, NumAxis, TimeAxis}
 import graft.sources.nc.NcFormat.parseTimeUnits
 import ZarrMeta._
 
@@ -310,8 +311,10 @@ final class ZarrScan(
       }.toArray
   }
 
+  private lazy val taskConf = BroadcastConf(conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrReaderFactory(new SerializableHadoopConf(conf))
+    new ZarrReaderFactory(taskConf)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows: Long = prunedBox match {
@@ -341,7 +344,7 @@ final case class ZarrInputPartition(
     vars: Array[ZVarPart],
     cols: Array[ZColSpec]) extends InputPartition
 
-final class ZarrReaderFactory(conf: SerializableHadoopConf)
+final class ZarrReaderFactory(conf: BroadcastConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ZarrPartitionReader(partition.asInstanceOf[ZarrInputPartition], conf.value)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.{JArr, JNum, JObj, JStr, JValue}
-import graft.sources.nc.SerializableHadoopConf
+import graft.sources.BroadcastConf
 import ZarrMeta._
 
 /** Zarr v2 store writer: driver-side metadata/small-array writes plus a
@@ -179,7 +179,19 @@ object ZarrIO {
       axes: Seq[(String, Array[Double])], // dim name -> axis key per index
       vars: Seq[(String, String, ZArrayMeta)], // (array name, df column, meta)
       df: DataFrame,
-      mergeExisting: Boolean): Unit = {
+      mergeExisting: Boolean): Unit =
+    chunkWrites(spark, root, axes, vars, df, mergeExisting)
+      .count() // materialize the write job
+
+  /** The chunk-write job of [[writeDataChunks]], unrun: one element per
+    * task, the number of chunks (or shards) it wrote. */
+  private[sources] def chunkWrites(
+      spark: SparkSession,
+      root: String,
+      axes: Seq[(String, Array[Double])],
+      vars: Seq[(String, String, ZArrayMeta)],
+      df: DataFrame,
+      mergeExisting: Boolean): org.apache.spark.rdd.RDD[Long] = {
     require(vars.nonEmpty, "no data variables to write")
     val meta0 = vars.head._3
     val k = meta0.ndim
@@ -189,7 +201,7 @@ object ZarrIO {
         m.sharding == meta0.sharding,
         s"$n chunk grid differs — one grid per store")
     }
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = BroadcastConf(spark.sparkContext.hadoopConfiguration)
 
     // axis value -> index maps, broadcast (axes are small by construction)
     val axisMaps = axes.map { case (_, vals) =>
@@ -266,7 +278,6 @@ object ZarrIO {
         writeTaskChunks(it, conf, root, varMetas, chunks, gridShape,
           chunkStrides, gridStrides, mergeExisting)
       }
-      .count() // materialize the write job
   }
 
   /** Routes a (chunkId, offset) key by chunk id only — offsets ride along
@@ -283,7 +294,7 @@ object ZarrIO {
     * buffers, flush each chunk when its id changes. */
   private def writeTaskChunks(
       it: Iterator[((Long, Long), Array[Double])],
-      conf: SerializableHadoopConf,
+      conf: BroadcastConf,
       root: String,
       varMetas: Seq[(String, ZArrayMeta)],
       chunks: Array[Int],

@@ -23,11 +23,11 @@ class GribSplitSpec extends SparkSpec {
     writeDays(s"$dir/m.grb", 20)
     val df = spark.read.format("grib1").load(s"$dir/m.grb")
     // 20 messages × ~tens of bytes is far below one openCost quantum: the
-    // file packs into at most TWO tasks, not 20 (pre-r15 behavior). Two,
-    // not one, because the first split absorbs the per-file open-cost
-    // charge — the same boundary arithmetic as Spark's FilePartition.
+    // file packs into ONE task, not 20 (pre-r15 behavior). The per-file
+    // open cost sizes the budget but is not charged into the file's first
+    // split, which it would otherwise fill on its own.
     val parts = df.rdd.getNumPartitions
-    assert(parts <= 2, s"expected <=2 packed splits for 20 tiny messages, got $parts")
+    assert(parts == 1, s"expected 1 packed split for 20 tiny messages, got $parts")
     // all 20 messages' cells survive the multi-message reader
     assert(df.count() == 20L * 4)
     val days = df.select("time").distinct().count()
@@ -44,11 +44,11 @@ class GribSplitSpec extends SparkSpec {
     writeDays(s"$dir/a.grb", 3)
     writeDays(s"$dir/b.grb", 3)
     val df = spark.read.format("grib1").load(dir)
-    // tiny messages, two files: at least one split per file (a split
-    // never spans files), at most two per file (open-cost boundary),
-    // and both files' rows present
+    // tiny messages, two files: exactly one split per file (a split
+    // never spans files, and each file fits one budget), and both files'
+    // rows present
     val parts = df.rdd.getNumPartitions
-    assert(parts >= 2 && parts <= 4, s"got $parts")
+    assert(parts == 2, s"got $parts")
     assert(df.count() == 2L * 3 * 4)
   }
 

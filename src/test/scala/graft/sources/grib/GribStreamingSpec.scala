@@ -64,4 +64,32 @@ class GribStreamingSpec extends SparkSpec {
       assert(batchSizes.synchronized(batchSizes.toSeq) == Seq(6L, 6L, 6L))
     } finally q.stop()
   }
+
+  test("micro-batches of one stream reuse one configuration broadcast") {
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val dir = Files.createTempDirectory("gribstream_bconf").toString
+    writeDay(s"$dir/part1.grb2", 1)
+    val q = spark.readStream.format("grib1").load(dir)
+      .writeStream.format("noop")
+      .option("checkpointLocation",
+        Files.createTempDirectory("gribstream_bconf_ckpt").toString)
+      .start()
+    // each trigger plans a fresh scan node, which asks the stream for its
+    // reader factory again
+    def lastBatchBroadcast(): Long = {
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      plan.collectFirst { case s: MicroBatchScanExec => s.readerFactory }
+        .get.asInstanceOf[GribReaderFactory].conf.broadcastId
+    }
+    try {
+      q.processAllAvailable()
+      val first = lastBatchBroadcast()
+      writeDay(s"$dir/part2.grb2", 2)
+      q.processAllAvailable()
+      assert(q.lastProgress.batchId == 1, "two micro-batches")
+      assert(lastBatchBroadcast() == first)
+    } finally q.stop()
+  }
 }
