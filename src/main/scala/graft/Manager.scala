@@ -53,9 +53,7 @@ trait DatasetManager extends Logging {
     val all = Manifest.listInputFiles(spark, inputDir,
         Manifest.KnownInputExtensions)
       .select("path").collect().map(_.getString(0)).toSeq
-    val kinds = all.groupBy(p =>
-      if (Manifest.isNetcdf(p)) "netcdf"
-      else if (Manifest.isGrib(p)) "grib" else "parquet")
+    val kinds = all.groupBy(Manifest.formatOf)
     require(kinds.size <= 1,
       s"$inputDir mixes input formats ${kinds.keys.mkString(", ")} " +
         s"(${kinds.view.mapValues(_.length).toMap}); archive the originals " +

@@ -68,7 +68,7 @@ object Manifest {
     full.join(manifest.select(dimCols.map(col): _*).distinct(), dimCols, "left_anti")
   }
 
-  /** One shared extension list per format — dispatch (openInput), the
+  /** One shared extension list per format — dispatch ([[formatOf]]), the
     * manager's mixed-dir guard, and the scans' own listings must agree on
     * what counts as what, so they all derive from these. */
   val NetcdfExtensions: Seq[String] = Seq(".nc", ".cdf")
@@ -84,30 +84,51 @@ object Manifest {
 
   def isTiff(path: String): Boolean = TiffExtensions.exists(path.endsWith)
 
-  /** Open one input by format, dispatched on extension: classic NetCDF and
-    * GRIB (either edition) go through their DSv2 scans (S9's real forms),
-    * everything else is parquet — so the SAME manager lifecycle runs on
-    * climate landing dirs and harness parquet alike (transform.py:75-79's
-    * format list). */
-  def openInput(spark: SparkSession, path: String): DataFrame =
-    if (isNetcdf(path)) spark.read.format("netcdf").load(path)
-    else if (isGrib(path)) spark.read.format("grib1").load(path)
-    else if (isTiff(path)) spark.read.format("geotiff").load(path)
-    else spark.read.parquet(path)
+  /** The reader of one input, by extension: classic NetCDF and GRIB
+    * (either edition) and GeoTIFF go through their DSv2 scans (S9's real
+    * forms), everything else is parquet — so the SAME manager lifecycle
+    * runs on climate landing dirs and harness parquet alike
+    * (transform.py:75-79's format list). Dispatch, the manager's mixed-dir
+    * guard and [[multiScan]] all classify through this. */
+  def formatOf(path: String): String =
+    if (isNetcdf(path)) "netcdf"
+    else if (isGrib(path)) "grib1"
+    else if (isTiff(path)) "geotiff"
+    else "parquet"
 
-  /** S10 — multi-file union scan with identical-schema assertion
+  /** Open one input by format ([[formatOf]]). */
+  def openInput(spark: SparkSession, path: String): DataFrame =
+    formatOf(path) match {
+      case "parquet" => spark.read.parquet(path)
+      case format => spark.read.format(format).load(path)
+    }
+
+  /** S10 — multi-file scan with identical-schema assertion
     * (transform.py:40-117): all parts must agree on the dimension schema the
-    * way MultiZarrToZarr requires `identical_dimensions` to agree. */
+    * way MultiZarrToZarr requires `identical_dimensions` to agree. The files
+    * load as ONE relation, the reference's virtual concatenation: one scan,
+    * one planning pass and one split budget over the whole archive, not an
+    * N-way union of N scans. The DSv2 sources refuse schema drift in their
+    * own resolve (grib1's schema is fixed); parquet compares each path's
+    * footer schema here first. A list mixing formats is refused. */
   def multiScan(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "multiScan needs at least one path")
-    val parts = paths.map(openInput(spark, _))
-    val schemas = parts.map(_.schema.map(f => (f.name, f.dataType)).toSet)
-    schemas.zip(paths).foreach { case (s, p) =>
-      require(s == schemas.head,
-        s"Schema of $p differs from ${paths.head}: $s vs ${schemas.head} " +
-          "(identical_dimensions violation, transform.py:335-343)")
+    val byFormat = paths.groupBy(formatOf)
+    require(byFormat.size == 1,
+      s"multiScan mixes input formats ${byFormat.keys.toSeq.sorted.mkString(", ")} " +
+        s"(${byFormat.view.mapValues(_.length).toMap}); scan one format at a time")
+    formatOf(paths.head) match {
+      case "parquet" =>
+        val schemas = paths.map(p =>
+          spark.read.parquet(p).schema.map(f => (f.name, f.dataType)).toSet)
+        schemas.zip(paths).foreach { case (s, p) =>
+          require(s == schemas.head,
+            s"Schema of $p differs from ${paths.head}: $s vs ${schemas.head} " +
+              "(identical_dimensions violation, transform.py:335-343)")
+        }
+        spark.read.parquet(paths: _*)
+      case format => spark.read.format(format).load(paths: _*)
     }
-    parts.reduce(_ unionByName _)
   }
 
   /** S14 — per-file time ranges from any file-backed scan: one row per file
@@ -133,11 +154,6 @@ object Manifest {
         .select("path", "min_time", "max_time", "n_rows")
     }.reduce(_ unionByName _)
   }
-
-  /** S13 — open a single raw file for QC comparison (publish.py:1097-1175);
-    * the caller composes Normalize.normalize on top. */
-  def openRaw(spark: SparkSession, path: String): DataFrame =
-    openInput(spark, path)
 
   /** P4 — move original input files into `<dir>_originals/` after a
     * conversion pass (transform.py:521-537). Hadoop FS rename, so file://

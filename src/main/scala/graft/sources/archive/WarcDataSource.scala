@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Warc
-import graft.sources.BroadcastConf
+import graft.sources.{BroadcastConf, FileMicroBatchStream, FileScan}
 
 /** DataSource V2 batch reader for WARC archives —
   * `spark.read.format("warc").load(dirOrFile)` over `.warc` /
@@ -109,14 +109,14 @@ object WarcTable {
   def resolve(options: CaseInsensitiveStringMap): WarcTable = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = Option(options.get("path")).toSeq
+    val paths = FileScan.paths(options)
     require(paths.nonEmpty, "warc scan needs a path")
     val maxSplit = Option(options.get("maxSplitBytes"))
       .map(_.toLong).getOrElse(128L << 20)
     val maxMember = Option(options.get("maxMemberBytes"))
       .map(_.toLong).getOrElse(256L << 20)
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = ArchiveSplit.listFiles(conf, paths, isWarcName)
+    val files = FileScan.listFiles(conf, paths, isWarcName)
       .map(st => (st.getPath.toString, st.getLen))
     new WarcTable(files, conf, maxSplit, maxMember, paths, maxFiles)
   }
@@ -151,16 +151,19 @@ final class WarcScan(table: WarcTable, required: StructType)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  private def partitionsOfFile(path: String, len: Long): Seq[InputPartition] =
+    ArchiveSplit.ranges(len, table.maxSplitBytes).map { case (s, e) =>
+      WarcInputPartition(path, s, e, len, WarcTable.codecOf(path),
+        table.maxMemberBytes, required.fieldNames)
+    }
+
   /** Streaming over a landing dir: per-file admission, then the SAME
     * split partitions as the batch scan. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArchiveMicroBatchStream(table.paths, table.conf,
+    new FileMicroBatchStream(table.paths, table.conf,
       WarcTable.isWarcName, table.maxFilesPerTrigger,
-      (path, len) => ArchiveSplit.ranges(len, table.maxSplitBytes)
-        .map { case (s, e) => WarcInputPartition(path, s, e, len,
-          WarcTable.codecOf(path), table.maxMemberBytes,
-          required.fieldNames) },
+      _.flatMap(st => partitionsOfFile(st.getPath.toString, st.getLen)),
       createReaderFactory())
 
   override def description(): String =
@@ -169,13 +172,7 @@ final class WarcScan(table: WarcTable, required: StructType)
       s"ReadSchema: ${required.simpleString}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    table.files.flatMap { case (path, len) =>
-      ArchiveSplit.ranges(len, table.maxSplitBytes).map { case (s, e) =>
-        WarcInputPartition(path, s, e, len,
-          WarcTable.codecOf(path), table.maxMemberBytes,
-          required.fieldNames)
-      }
-    }.toArray
+    table.files.flatMap { case (path, len) => partitionsOfFile(path, len) }.toArray
 
   private lazy val taskConf = BroadcastConf(table.conf)
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Tar
-import graft.sources.BroadcastConf
+import graft.sources.{BroadcastConf, FileMicroBatchStream, FileScan}
 
 /** DataSource V2 batch reader for WebDataset shards —
   * `spark.read.format("webdataset").load(dirOrFile)` over `.tar` /
@@ -97,14 +97,14 @@ object WebdatasetTable {
   def resolve(options: CaseInsensitiveStringMap): WebdatasetTable = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = Option(options.get("path")).toSeq
+    val paths = FileScan.paths(options)
     require(paths.nonEmpty, "webdataset scan needs a path")
     val maxSplit = Option(options.get("maxSplitBytes"))
       .map(_.toLong).getOrElse(128L << 20)
     val maxMember = Option(options.get("maxMemberBytes"))
       .map(_.toLong).getOrElse(256L << 20)
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = ArchiveSplit.listFiles(conf, paths, isTarName)
+    val files = FileScan.listFiles(conf, paths, isTarName)
       .map(st => (st.getPath.toString, st.getLen))
     new WebdatasetTable(files, conf, maxSplit, maxMember, paths, maxFiles)
   }
@@ -165,9 +165,10 @@ final class WebdatasetScan(table: WebdatasetTable, required: StructType)
     * the SAME split partitions as the batch scan. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArchiveMicroBatchStream(table.paths, table.conf,
+    new FileMicroBatchStream(table.paths, table.conf,
       WebdatasetTable.isTarName, table.maxFilesPerTrigger,
-      partitionsOfFile, createReaderFactory())
+      _.flatMap(st => partitionsOfFile(st.getPath.toString, st.getLen)),
+      createReaderFactory())
 
   override def description(): String =
     s"graft-webdataset shards=${table.files.length}, " +

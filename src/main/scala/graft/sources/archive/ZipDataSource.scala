@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Zip
-import graft.sources.BroadcastConf
+import graft.sources.{BroadcastConf, FileMicroBatchStream, FileScan, SplitBudget}
 
 /** DataSource V2 batch reader for ZIP archives —
   * `spark.read.format("zip").load(dirOrFile)`: one row per member.
@@ -122,12 +122,12 @@ object ZipTable {
   def resolve(options: CaseInsensitiveStringMap): ZipTable = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = Option(options.get("path")).toSeq
+    val paths = FileScan.paths(options)
     require(paths.nonEmpty, "zip scan needs a path")
     val maxSplit = Option(options.get("maxSplitBytes"))
       .map(_.toLong).getOrElse(128L << 20)
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = ArchiveSplit.listFiles(conf, paths, isZipName)
+    val files = FileScan.listFiles(conf, paths, isZipName)
       .map(st => (st.getPath.toString, st.getModificationTime, st.getLen))
     new ZipTable(files, conf, maxSplit, paths, maxFiles)
   }
@@ -193,26 +193,10 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
     val members = ZipTable.directoryOf(table.conf, path, mtime, len)
       .filter(c => !c.name.endsWith("/")) // directories carry no row
       .filter(keep)
-    if (members.isEmpty) return Seq.empty
-    val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[Zip.Central]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[Zip.Central]
-    var size = 0L
-    members.foreach { c =>
-      if (cur.nonEmpty && size + c.csize > table.maxSplitBytes) {
-        groups += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty
-        size = 0L
-      }
-      cur += c; size += c.csize
+    SplitBudget.pack(members.map(path -> _), (c: Zip.Central) => c.csize,
+      table.maxSplitBytes).map { case (_, g) =>
+      ZipInputPartition(path, len, g, required.fieldNames)
     }
-    if (cur.nonEmpty) groups += cur.toSeq
-    groups.map(g => ZipInputPartition(path, len, g, required.fieldNames)).toSeq
-  }
-
-  // streaming reuses this per admitted file (mtime from a fresh stat)
-  private[archive] def partitionsForStream(path: String, len: Long): Seq[InputPartition] = {
-    val p = new HPath(path)
-    val st = p.getFileSystem(table.conf).getFileStatus(p)
-    partitionsOfFile(path, st.getModificationTime, len)
   }
 
   override def description(): String =
@@ -228,9 +212,11 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
   /** Streaming over a landing dir of archives. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArchiveMicroBatchStream(table.paths, table.conf,
+    new FileMicroBatchStream(table.paths, table.conf,
       ZipTable.isZipName, table.maxFilesPerTrigger,
-      partitionsForStream, createReaderFactory())
+      _.flatMap(st => partitionsOfFile(st.getPath.toString,
+        st.getModificationTime, st.getLen)),
+      createReaderFactory())
 
   private lazy val taskConf = BroadcastConf(table.conf)
 

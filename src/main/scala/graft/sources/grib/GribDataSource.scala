@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.BroadcastConf
+import graft.sources.{BroadcastConf, FileMicroBatchStream, FileScan, Manifest, SplitBudget}
 import graft.sources.nc.NcScan
 import GribFormat.GribMessage
 
@@ -146,38 +146,23 @@ object GribTable {
     }
   }
 
-  private def isGrib(name: String): Boolean =
-    graft.sources.Manifest.isGrib(name)
-
-  /** Natural-sorted GRIB files under the given paths (dirs expand; a
-    * missing dir — a streaming landing dir not yet created — is empty).
-    * Path statuses resolve on a bounded pool: a manager passing one
-    * explicit path per archive FILE must not pay O(files) SERIAL remote
-    * round trips at planning. */
-  private[grib] def listGribFiles(conf: Configuration,
-      paths: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(paths) { p0 =>
-      Future(scala.concurrent.blocking {
-        val p = new HPath(p0)
-        val fs = p.getFileSystem(conf)
-        // one RPC, not exists + getFileStatus
-        try {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(_.isFile)
-              .filter(f => isGrib(f.getPath.getName))
-          else Seq(st)
-        } catch {
-          case _: java.io.FileNotFoundException =>
-            Seq.empty[org.apache.hadoop.fs.FileStatus]
-        }
-      })
-    }, Duration.Inf).flatten
-      .sortBy(st => graft.sources.Manifest.naturalKey(st.getPath.toString))
+  /** Header-parsed messages of each file, cache misses parsed in parallel. */
+  private[grib] def messagesOf(conf: Configuration,
+      files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[(String, Seq[GribMessage])] = {
+    parseParallel(conf, files)
+    files.map(st => st.getPath.toString -> cachedMessages(conf, st))
   }
+
+  /** Surviving messages packed by [[SplitBudget]]: consecutive same-file
+    * messages share a task up to the scan's byte budget. One partition per
+    * message made a million-message archive a million tasks (quadratic
+    * shuffle-block growth downstream, guide §2.2) and a 60-message fixture
+    * 60 scheduler round-trips. */
+  private[grib] def pack(survivors: Seq[(String, GribMessage)],
+      cols: Array[String]): Seq[GribInputPartition] =
+    SplitBudget.packScan(survivors, (m: GribMessage) =>
+      m.dataBytes.toLong + (if (m.hasBitmap) m.bitmapBytes.toLong else 0L))
+      .map { case (p, ms) => GribInputPartition(p, ms, cols) }
 
   /** Per-file interval-window keys straight from the memoized message
     * HEADERS — zero payload decode, for manager-level window checks: the
@@ -192,17 +177,17 @@ object GribTable {
       ref: java.time.LocalDateTime, end: Long, start: Long)
   private[graft] def windowKeys(conf: Configuration, paths: Seq[String])
       : Seq[(String, Seq[WindowKey])] = {
-    val files = listGribFiles(conf, paths)
-    parseParallel(conf, files)
-    files.map(st => st.getPath.toString ->
-      cachedMessages(conf, st).map(m => WindowKey(
+    val files = FileScan.listFiles(conf, paths, Manifest.isGrib)
+    messagesOf(conf, files).map { case (p, ms) =>
+      p -> ms.map(m => WindowKey(
         m.paramId, m.member, m.derived, m.levelType,
         java.lang.Double.doubleToLongBits(m.level),
         java.lang.Double.doubleToLongBits(m.levelTo),
         m.probType, java.lang.Double.doubleToLongBits(m.probLo),
         java.lang.Double.doubleToLongBits(m.probHi), m.percentile,
         baseOf(m), m.stepMinutes,
-        m.stepStartMinutes)).distinct)
+        m.stepStartMinutes)).distinct
+    }
   }
 
   /** Parse the cache MISSES on a bounded pool — header walks are one
@@ -229,13 +214,10 @@ object GribTable {
   def resolve(options: CaseInsensitiveStringMap): GribTable = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = Option(options.get("path")).toSeq
+    val paths = FileScan.paths(options)
     require(paths.nonEmpty, "grib1 scan needs a path")
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = listGribFiles(conf, paths)
-    parseParallel(conf, files)
-    val byFile = files.map(st =>
-      st.getPath.toString -> cachedMessages(conf, st))
+    val byFile = messagesOf(conf, FileScan.listFiles(conf, paths, Manifest.isGrib))
     // spectral fields have no lat/lon rows — they scan through the
     // coefficient-space source, never silently through this schema
     byFile.find(_._2.exists(_.spectral.isDefined)).foreach { case (p, _) =>
@@ -339,17 +321,13 @@ final class GribScan(
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  /** Streaming batches prune and pack a trigger's files as a batch read
+    * of those files would. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GribMicroBatchStream(this, paths, conf, maxFilesPerTrigger)
-
-  /** Streaming batches reuse the batch pruning + partitioning verbatim. */
-  private[grib] def partitionsOf(path: String,
-      ms: Seq[GribMessage]): Seq[InputPartition] =
-    GribSplit.pack(ms.filter(keep).map(path -> _)).map { case (p, packed) =>
-      GribInputPartition(p, packed, required.fieldNames)
-    }
-  private[grib] def readerFactory: PartitionReaderFactory = createReaderFactory()
+    new FileMicroBatchStream(paths, conf, Manifest.isGrib, maxFilesPerTrigger,
+      files => plan(GribTable.messagesOf(conf, files)), createReaderFactory())
 
   /** SAME conversion as the filter-literal side (NcScan.toKey) so the
     * Double equality in keep() is exact by construction. */
@@ -406,12 +384,16 @@ final class GribScan(
     case _ => true
   }
 
+  private def survivorsOf(files: Seq[(String, Seq[GribMessage])]) =
+    files.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
+  private def plan(files: Seq[(String, Seq[GribMessage])]) =
+    GribTable.pack(survivorsOf(files), required.fieldNames)
+
   // lazy: description(), planInputPartitions(), and estimateStatistics()
   // all consult them — filter, pack and broadcast once per scan, not per
   // call (a micro-batch stream asks for a reader factory every trigger)
-  private lazy val survivors: Seq[(String, GribMessage)] =
-    byFile.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
-  private lazy val packed = GribSplit.pack(survivors)
+  private lazy val survivors: Seq[(String, GribMessage)] = survivorsOf(byFile)
+  private lazy val packed = GribTable.pack(survivors, required.fieldNames)
   private lazy val taskConf = BroadcastConf(conf)
 
   override def description(): String =
@@ -420,10 +402,7 @@ final class GribScan(
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    packed.map { case (p, ms) =>
-      GribInputPartition(p, ms, required.fieldNames)
-    }.toArray
+  override def planInputPartitions(): Array[InputPartition] = packed.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GribReaderFactory(taskConf)
@@ -440,48 +419,6 @@ final case class GribInputPartition(
     path: String,
     messages: Seq[GribMessage],
     cols: Array[String]) extends InputPartition
-
-/** Byte-budgeted message packing — Spark's `FilePartition.maxSplitBytes`
-  * sizing formula applied at GRIB-message granularity. One partition per
-  * message made a million-message archive a million tasks (quadratic
-  * shuffle-block growth downstream, guide §2.2) and a 60-message fixture
-  * 60 scheduler round-trips; packing consecutive same-file messages up to
-  * the split budget keeps tasks in the 100 MB-class at scale and collapses
-  * tiny scans to a handful of tasks locally. The budget derives from the
-  * session's `spark.sql.files.*` confs — scale-adaptive, no constants. */
-private[grib] object GribSplit {
-  private def msgBytes(m: GribMessage): Long =
-    m.dataBytes.toLong + (if (m.hasBitmap) m.bitmapBytes.toLong else 0L)
-
-  def pack(survivors: Seq[(String, GribMessage)]): Seq[(String, Seq[GribMessage])] = {
-    if (survivors.isEmpty) return Seq.empty
-    // the open cost charges once per FILE (messages of one file share the
-    // stream) into the total that sizes the budget, not into the file's
-    // first bin: with maxSplit equal to the open cost (any small archive)
-    // that charge filled the bin alone, and a one-split file planned two
-    val totalBytes = survivors.map { case (_, m) => msgBytes(m) }.sum +
-      survivors.iterator.map(_._1).distinct.size *
-        graft.sources.SplitBudget.openCostInBytes
-    val maxSplit = graft.sources.SplitBudget.maxSplitBytes(totalBytes)
-    val out = Seq.newBuilder[(String, Seq[GribMessage])]
-    var curPath: String = null
-    var cur = List.newBuilder[GribMessage]
-    var curBytes = 0L
-    var curEmpty = true
-    def flush(): Unit = if (!curEmpty) {
-      out += ((curPath, cur.result()))
-      cur = List.newBuilder[GribMessage]; curBytes = 0L; curEmpty = true
-    }
-    survivors.foreach { case (p, m) =>
-      val cost = msgBytes(m)
-      if (p != curPath || (!curEmpty && curBytes + cost > maxSplit)) flush()
-      curPath = p
-      cur += m; curBytes += cost; curEmpty = false
-    }
-    flush()
-    out.result()
-  }
-}
 
 final class GribReaderFactory(private[grib] val conf: BroadcastConf)
     extends PartitionReaderFactory {
@@ -605,113 +542,4 @@ final class GribPartitionReader(part: GribInputPartition, conf: Configuration)
   }
 
   override def close(): Unit = in.close()
-}
-
-/** Streaming offset: the natural-order key watermark of the last admitted
-  * file (same convention as the NetCDF stream — part10 sorts after part9). */
-final case class GribOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = graft.meta.JStr(watermark).render
-}
-
-/** MICRO_BATCH_READ over a GRIB landing directory — the live-feed shape of
-  * operational archives (MRMS/RTMA drop a new GRIB file per product cycle).
-  * Same contract as [[graft.sources.nc.NcMicroBatchStream]]: files are
-  * IMMUTABLE, the directory is append-only with naturally-increasing names,
-  * offsets are filename watermarks that only move forward, and
-  * `maxFilesPerTrigger` bounds each batch so attaching to a pre-populated
-  * archive drains it incrementally. Message pruning and the positioned-slab
-  * reader are the batch scan's, verbatim. */
-final class GribMicroBatchStream(
-    scan: GribScan,
-    paths: Seq[String],
-    @transient conf: Configuration,
-    maxFilesPerTrigger: Option[Int])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-
-  require(paths.nonEmpty, "grib streaming needs the source paths")
-
-  private def key(p: String): String = graft.sources.Manifest.naturalKey(p)
-
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    GribTable.listGribFiles(conf, paths)
-
-  /** One listing per trigger: latestOffset selects the batch and caches it
-    * for the planInputPartitions call that follows. */
-  @volatile private var lastBatch: Option[(String, String,
-    Seq[org.apache.hadoop.fs.FileStatus])] = None
-
-  @volatile private var availableNowTarget: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listing()
-    availableNowTarget = Some(
-      if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val files = listing()
-    GribOffset(if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def initialOffset(): Offset = GribOffset("")
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val lo = start.asInstanceOf[GribOffset].watermark
-    val candidates = listing()
-      .filter(st => key(st.getPath.toString) > key(lo))
-      .filter(st => availableNowTarget.forall(t =>
-        key(st.getPath.toString) <= key(t)))
-    val admitted = limit match {
-      case m: ReadMaxFiles => candidates.take(m.maxFiles())
-      case _ => candidates
-    }
-    if (admitted.isEmpty) { lastBatch = None; start }
-    else {
-      val hi = admitted.last.getPath.toString
-      lastBatch = Some((lo, hi, admitted))
-      GribOffset(hi)
-    }
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    graft.meta.JValue.parse(json) match {
-      case graft.meta.JStr(w) => GribOffset(w)
-      case other => throw new IllegalArgumentException(s"Bad GRIB offset $other")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[GribOffset].watermark
-    val hi = end.asInstanceOf[GribOffset].watermark
-    val batch = lastBatch match {
-      case Some((l, h, files)) if l == lo && h == hi => files // cached this trigger
-      case _ => // checkpoint replay: re-derive from the (immutable) dir
-        listing().filter { st =>
-          val k = key(st.getPath.toString)
-          k > key(lo) && k <= key(hi)
-        }
-    }
-    batch.flatMap { st =>
-      scan.partitionsOf(st.getPath.toString,
-        GribTable.cachedMessages(conf, st))
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    scan.readerFactory // identical reader path as batch
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

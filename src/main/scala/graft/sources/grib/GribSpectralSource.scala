@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.BroadcastConf
+import graft.sources.{BroadcastConf, FileScan, Manifest}
 import graft.sources.nc.NcScan
 import GribFormat.GribMessage
 
@@ -79,12 +79,9 @@ object GribSpectralTable {
   def resolve(options: CaseInsensitiveStringMap): GribSpectralTable = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = Option(options.get("path")).toSeq
+    val paths = FileScan.paths(options)
     require(paths.nonEmpty, "grib-spectral scan needs a path")
-    val files = GribTable.listGribFiles(conf, paths)
-    GribTable.parseParallel(conf, files) // bounded-pool header fan-out
-    val byFile = files.map(st =>
-      st.getPath.toString -> GribTable.cachedMessages(conf, st))
+    val byFile = GribTable.messagesOf(conf, FileScan.listFiles(conf, paths, Manifest.isGrib))
     // the shared header cache is LRU-bounded inline (GribTable
     // .cachedMessages) — no explicit eviction step needed here
     byFile.find(_._2.exists(_.spectral.isEmpty)).foreach { case (p, _) =>
@@ -233,7 +230,7 @@ final class GribSpectralScan(
 
   private lazy val survivors: Seq[(String, GribMessage)] =
     byFile.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
-  private lazy val packed = GribSplit.pack(survivors)
+  private lazy val packed = GribTable.pack(survivors, required.fieldNames)
   private lazy val taskConf = BroadcastConf(conf)
 
   override def description(): String =
@@ -242,10 +239,7 @@ final class GribSpectralScan(
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    packed.map { case (p, ms) =>
-      GribInputPartition(p, ms, required.fieldNames)
-    }.toArray
+  override def planInputPartitions(): Array[InputPartition] = packed.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GribSpectralReaderFactory(taskConf)

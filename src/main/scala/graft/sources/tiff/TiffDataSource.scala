@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.BroadcastConf
+import graft.sources.{BroadcastConf, FileMicroBatchStream, FileScan, SplitBudget}
 import TiffFormat.TiffRaster
 
 /** DataSource V2 batch reader for GeoTIFF / cloud-optimized GeoTIFF
@@ -137,33 +137,23 @@ object TiffTable {
     }
   }
 
-  private def isTiff(name: String): Boolean = {
+  private[tiff] def isTiff(name: String): Boolean = {
     val n = name.toLowerCase
     n.endsWith(".tif") || n.endsWith(".tiff")
   }
 
-  private[tiff] def listTiffFiles(conf: Configuration,
-      paths: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] = {
+  /** Parsed header of each file at the given overview level — cache
+    * misses on a bounded pool: header-only, one remote round trip per
+    * file, never serial O(files) on the driver. */
+  private[tiff] def rastersOf(conf: Configuration,
+      files: Seq[org.apache.hadoop.fs.FileStatus],
+      overview: Int): Seq[(String, TiffRaster)] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(paths) { p0 =>
-      Future(scala.concurrent.blocking {
-        val p = new HPath(p0)
-        val fs = p.getFileSystem(conf)
-        try {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(_.isFile)
-              .filter(f => isTiff(f.getPath.getName))
-          else Seq(st)
-        } catch {
-          case _: java.io.FileNotFoundException =>
-            Seq.empty[org.apache.hadoop.fs.FileStatus]
-        }
-      })
-    }, Duration.Inf).flatten
-      .sortBy(st => graft.sources.Manifest.naturalKey(st.getPath.toString))
+    Await.result(Future.traverse(files)(st =>
+      Future(scala.concurrent.blocking(
+        st.getPath.toString -> parseFile(conf, st, overview)))), Duration.Inf)
   }
 
   /** Per-file band counts straight from the memoized HEADERS — zero
@@ -171,36 +161,25 @@ object TiffTable {
     * pattern). */
   private[graft] def bandCounts(conf: Configuration,
       paths: Seq[String]): Seq[(String, Int)] = {
-    val files = listTiffFiles(conf, paths)
+    val files = FileScan.listFiles(conf, paths, isTiff)
     files.map(st => st.getPath.toString -> parseFile(conf, st).bands)
   }
 
   /** Identity of a read for the inferSchema→getTable handoff. */
   private[tiff] def optionsKey(options: CaseInsensitiveStringMap): String =
-    Seq("path", "overview", "maxFilesPerTrigger")
+    Seq("path", "paths", "overview", "maxFilesPerTrigger")
       .map(k => s"$k=${options.get(k)}").mkString("|")
 
   def resolve(options: CaseInsensitiveStringMap): TiffTable = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val paths = Option(options.get("path")).toSeq
+    val paths = FileScan.paths(options)
     require(paths.nonEmpty, "geotiff scan needs a path")
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
     // COG pyramid level: 0 = full resolution (default); k = k-th
     // overview — a preview-scale scan plans 4^-k of the tile bytes
     val overview = Option(options.get("overview")).map(_.toInt).getOrElse(0)
-    val files = listTiffFiles(conf, paths)
-    // parse cache misses on a bounded pool — header-only, one remote
-    // round trip per file, never serial O(files) on the driver
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.traverse(files)(st =>
-        Future(scala.concurrent.blocking(parseFile(conf, st, overview)))), Duration.Inf)
-    }
-    val byFile = files.map(st =>
-      st.getPath.toString -> parseFile(conf, st, overview))
+    val byFile = rastersOf(conf, FileScan.listFiles(conf, paths, isTiff), overview)
     // one CRS class per scan: a directory mixing projected and
     // geographic rasters has no single honest schema — refuse by name
     val (proj, geo) = byFile.partition(_._2.projected)
@@ -289,21 +268,14 @@ final class TiffScan(
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  /** Streaming batches prune and pack a trigger's files as a batch read
+    * of those files would. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TiffMicroBatchStream(this, paths, conf, maxFilesPerTrigger, overview)
-
-  /** Streaming batches reuse the batch pruning + packing verbatim (one
-    * file per call, so the budget sees that file's surviving tiles). */
-  private[tiff] def partitionsOf(path: String,
-      r: TiffRaster): Seq[InputPartition] =
-    fileTiles(path, r).toSeq.flatMap { f =>
-      val openCost = graft.sources.SplitBudget.openCostInBytes
-      val maxSplit = graft.sources.SplitBudget.maxSplitBytes(
-        f._3.map(_.count).sum + openCost)
-      packTiles(f, maxSplit, openCost)
-    }
-  private[tiff] def readerFactory: PartitionReaderFactory = createReaderFactory()
+    new FileMicroBatchStream(paths, conf, TiffTable.isTiff, maxFilesPerTrigger,
+      files => plan(TiffTable.rastersOf(conf, files, overview)),
+      createReaderFactory())
 
   // all rasters in one scan share a CRS class (resolve() refused a mix)
   private val projectedCrs = byFile.headOption.exists(_._2.projected)
@@ -411,45 +383,21 @@ final class TiffScan(
       }
     }
 
-  /** Greedy same-file pack of tile refs up to `maxSplit` bytes (open cost
-    * charged once per split, like Spark's file-granular charging). */
-  private def packTiles(
-      f: (String, TiffRaster, Seq[TiffTileRef], (Int, Int, Int, Int), Array[Int]),
-      maxSplit: Long, openCost: Long): Seq[TiffInputPartition] = {
-    val (p, slim, tiles, (x0, x1, y0, y1), bands) = f
-    val groups = Seq.newBuilder[Seq[TiffTileRef]]
-    var cur = List.newBuilder[TiffTileRef]
-    // the per-file open cost charges ONCE, into the file's first split
-    // (Spark's file-granular charging) — charging it into every split
-    // made each split start "full" and degenerate back to one tile each
-    var curBytes = openCost
-    var curEmpty = true
-    tiles.foreach { t =>
-      if (!curEmpty && curBytes + t.count > maxSplit) {
-        groups += cur.result()
-        cur = List.newBuilder[TiffTileRef]; curBytes = 0L; curEmpty = true
-      }
-      cur += t; curBytes += t.count; curEmpty = false
+  /** Surviving tiles packed by [[SplitBudget]]: one partition per tile
+    * made a million-tile COG archive a million tasks; consecutive
+    * same-file tiles now share a task and one open stream. */
+  private def plan(files: Seq[(String, TiffRaster)]): Seq[TiffInputPartition] = {
+    val perFile = files.flatMap { case (p, r) => fileTiles(p, r) }
+    val byPath = perFile.map(f => f._1 -> f).toMap
+    SplitBudget.packScan(perFile.flatMap(f => f._3.map(f._1 -> _)),
+      (t: TiffTileRef) => t.count).map { case (p, tiles) =>
+      val (_, slim, _, (x0, x1, y0, y1), bands) = byPath(p)
+      TiffInputPartition(p, slim, tiles.toArray, x0, x1, y0, y1, bands,
+        required.fieldNames)
     }
-    if (!curEmpty) groups += cur.result()
-    groups.result().map(g => TiffInputPartition(p, slim, g.toArray,
-      x0, x1, y0, y1, bands, required.fieldNames))
   }
 
-  /** Surviving tiles packed into byte-budgeted partitions (SplitBudget —
-    * Spark's maxSplitBytes formula at tile granularity): one partition per
-    * tile made a million-tile COG archive a million tasks; consecutive
-    * same-file tiles now share a task and one open stream. */
-  private lazy val survivors: Seq[TiffInputPartition] = {
-    val perFile = byFile.flatMap { case (p, r) => fileTiles(p, r) }
-    if (perFile.isEmpty) Seq.empty
-    else {
-      val openCost = graft.sources.SplitBudget.openCostInBytes
-      val totalBytes = perFile.map(f => f._3.map(_.count).sum + openCost).sum
-      val maxSplit = graft.sources.SplitBudget.maxSplitBytes(totalBytes)
-      perFile.flatMap(packTiles(_, maxSplit, openCost))
-    }
-  }
+  private lazy val survivors: Seq[TiffInputPartition] = plan(byFile)
 
   override def description(): String =
     s"graft-geotiff tiles=${survivors.map(_.tiles.length).sum}/${byFile.map(_._2.tileOffsets.length).sum}, " +
@@ -586,109 +534,4 @@ final class TiffPartitionReader(part: TiffInputPartition, conf: Configuration)
   }
 
   override def close(): Unit = in.close()
-}
-
-final case class TiffOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = graft.meta.JStr(watermark).render
-}
-
-/** MICRO_BATCH_READ over a COG landing directory — the live-feed shape
-  * (one raster lands per date): natural-order filename watermark, the
-  * same admission-control / AvailableNow / checkpoint-replay protocol
-  * as the GRIB and NC streams, batch pruning + partitioning reused
-  * verbatim. */
-final class TiffMicroBatchStream(
-    scan: TiffScan,
-    paths: Seq[String],
-    @transient conf: Configuration,
-    maxFilesPerTrigger: Option[Int],
-    overview: Int = 0)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-
-  require(paths.nonEmpty, "geotiff streaming needs the source paths")
-
-  private def key(p: String): String = graft.sources.Manifest.naturalKey(p)
-
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    TiffTable.listTiffFiles(conf, paths)
-
-  /** One listing per trigger: latestOffset selects the batch and caches
-    * it for the planInputPartitions call that follows. */
-  @volatile private var lastBatch: Option[(String, String,
-    Seq[org.apache.hadoop.fs.FileStatus])] = None
-
-  @volatile private var availableNowTarget: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listing()
-    availableNowTarget = Some(
-      if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val files = listing()
-    TiffOffset(if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def initialOffset(): Offset = TiffOffset("")
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val lo = start.asInstanceOf[TiffOffset].watermark
-    val candidates = listing()
-      .filter(st => key(st.getPath.toString) > key(lo))
-      .filter(st => availableNowTarget.forall(t =>
-        key(st.getPath.toString) <= key(t)))
-    val admitted = limit match {
-      case m: ReadMaxFiles => candidates.take(m.maxFiles())
-      case _ => candidates
-    }
-    if (admitted.isEmpty) { lastBatch = None; start }
-    else {
-      val hi = admitted.last.getPath.toString
-      lastBatch = Some((lo, hi, admitted))
-      TiffOffset(hi)
-    }
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    graft.meta.JValue.parse(json) match {
-      case graft.meta.JStr(w) => TiffOffset(w)
-      case other => throw new IllegalArgumentException(s"Bad COG offset $other")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[TiffOffset].watermark
-    val hi = end.asInstanceOf[TiffOffset].watermark
-    val batch = lastBatch match {
-      case Some((l, h, files)) if l == lo && h == hi => files // cached this trigger
-      case _ => // checkpoint replay: re-derive from the (immutable) dir
-        listing().filter { st =>
-          val k = key(st.getPath.toString)
-          k > key(lo) && k <= key(hi)
-        }
-    }
-    batch.flatMap { st =>
-      scan.partitionsOf(st.getPath.toString,
-        TiffTable.parseFile(conf, st, overview))
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    scan.readerFactory // identical reader path as batch
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

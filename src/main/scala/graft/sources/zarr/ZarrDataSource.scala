@@ -41,8 +41,9 @@ import ZarrMeta._
   *    claimed filters need no residual.
   *  - **Column pruning is object pruning**: each variable owns its chunk
   *    objects; an unprojected variable costs zero reads.
-  *  - **Partitioning**: pruned chunks are batched into ~`splitBytes` tasks
-  *    (decompressed size), so a year-long store fans out across executors.
+  *  - **Partitioning**: pruned chunks are batched into tasks under the
+  *    scan's [[graft.sources.SplitBudget]] (decompressed size, one open
+  *    cost per store), so a year-long store fans out across executors.
   */
 class ZarrDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zarr"
@@ -78,19 +79,16 @@ object ZarrTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("zarr scan needs a path"))
-    val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
     val store =
       if (kerchunk) ZarrMeta.resolveRefs(conf, path)
       else ZarrMeta.resolveDirectory(conf, path)
-    new ZarrTable(planGrid(conf, path, store), splitBytes, conf)
+    new ZarrTable(planGrid(conf, path, store), conf)
   }
 
   /** Scan table over an already-resolved store (the netCDF-4/HDF5 route —
     * its manifest is built in memory, not read from a file). */
-  def fromStore(conf: Configuration, label: String, store: ResolvedStore,
-      splitBytes: Long): ZarrTable =
-    new ZarrTable(planGrid(conf, label, store), splitBytes, conf)
+  def fromStore(conf: Configuration, label: String, store: ResolvedStore): ZarrTable =
+    new ZarrTable(planGrid(conf, label, store), conf)
 
   /** Coordinate arrays are 1-D arrays labeled with their own name
     * (xarray's `_ARRAY_DIMENSIONS` convention); everything else is data.
@@ -195,7 +193,6 @@ object ZarrTable {
 
 final class ZarrTable(
     val grid: ZarrGrid,
-    val splitBytes: Long,
     @transient val conf: Configuration) extends Table with SupportsRead {
   override def name(): String = s"zarr(${grid.source})"
   override def schema(): StructType = ZarrTable.schemaOf(grid)
@@ -239,14 +236,13 @@ final class ZarrScanBuilder(table: ZarrTable) extends ScanBuilder
     required = requiredSchema
 
   override def build(): Scan =
-    new ZarrScan(table.grid, required, pushed, table.splitBytes, table.conf)
+    new ZarrScan(table.grid, required, pushed, table.conf)
 }
 
 final class ZarrScan(
     grid: ZarrGrid,
     required: StructType,
     pushed: Array[Filter],
-    splitBytes: Long,
     @transient conf: Configuration)
     extends Scan with Batch with SupportsReportStatistics {
 
@@ -277,12 +273,16 @@ final class ZarrScan(
         .mkString(", ")
       case None => "<store pruned>"
     }
-    val chunks = planInputPartitions().map(_.asInstanceOf[ZarrInputPartition].chunks.length).sum
+    val chunks = partitions.map(_.asInstanceOf[ZarrInputPartition].chunks.length).sum
     s"graft-zarr ${grid.source}, PushedFilters: [${pushed.mkString(", ")}], " +
       s"box: [$box], chunksRead: $chunks, ReadSchema: ${required.simpleString}"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = prunedBox match {
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  // lazy: description() and planInputPartitions() both consult it — every
+  // chunk ref resolves once per scan, not per call
+  private lazy val partitions: Array[InputPartition] = prunedBox match {
     case None => Array.empty
     case Some(box) =>
       val vars = grid.dataArrays.filter(a => required.fieldNames.contains(a.name))
@@ -295,7 +295,9 @@ final class ZarrScan(
       }
       val bytesPerChunk = math.max(1L,
         vars.map(_.meta.bytesPerChunk).sum)
-      val perPart = math.max(1L, splitBytes / bytesPerChunk).toInt
+      val maxSplit = graft.sources.SplitBudget.maxSplitBytes(
+        chunkCoords.length * bytesPerChunk, files = 1)
+      val perPart = math.max(1L, maxSplit / bytesPerChunk).toInt
       val cols: Array[ZColSpec] = required.fieldNames.map { f =>
         val ax = grid.axes.indexWhere(_.name == f)
         if (ax >= 0) ZAxisCol(ax)

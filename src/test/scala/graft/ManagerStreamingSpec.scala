@@ -154,7 +154,7 @@ class ManagerStreamingSpec extends SparkSpec {
     runOnce()
     assert(store.dataset().count() == 3 * 4)
     // second scheduled run picks up ONLY the newly landed file (the
-    // NcOffset watermark round-trips through the checkpoint)
+    // FileOffset watermark round-trips through the checkpoint)
     writeNcDaily(s"$root/input/b.nc", 4, 2, base = 9.0)
     runOnce()
     assert(store.dataset().count() == 5 * 4)
@@ -227,6 +227,29 @@ class ManagerStreamingSpec extends SparkSpec {
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$root/input/b.parquet"))
     assertThrows[IllegalArgumentException](mgr.inputFiles())
+  }
+
+  test("a mixed TIFF+parquet input dir fails the same guard, naming both formats") {
+    val root = Files.createTempDirectory("mgr_mixed_tif").toString
+    val mgr = new DatasetManager {
+      val spark: SparkSession = sp
+      val desc: DatasetDescriptor = testDesc
+      val storePath: String = s"$root/store"
+      val inputDir: String = s"$root/input"
+    }
+    new java.io.File(s"$root/input").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/input/a.tif"),
+      graft.sources.tiff.TiffFormat.write(2, 2, Array(Array(1.0, 2.0, 3.0, 4.0)),
+        3, 64, 0, 2, 1.0, 1.0, graft.sources.tiff.TiffFormat.WriteOpts()))
+    dailyGrid(1, 2).coalesce(1).write.parquet(s"$root/input/tmp_pq")
+    val part = new java.io.File(s"$root/input/tmp_pq").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$root/input/b.parquet"))
+    val e = intercept[IllegalArgumentException](mgr.inputFiles())
+    assert(e.getMessage.contains("mixes input formats"), e.getMessage)
+    assert(e.getMessage.contains("geotiff") && e.getMessage.contains("parquet"),
+      e.getMessage)
   }
 
   test("checkIfNewData opens only the NEWEST manifest file (convenience.py:473-504)") {

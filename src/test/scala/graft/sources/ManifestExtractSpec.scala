@@ -60,6 +60,40 @@ class ManifestExtractSpec extends SparkSpec {
     }
   }
 
+  test("multiScan plans one relation over a GRIB archive, not a union of scans") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = Files.createTempDirectory("multiscan_grib").toString
+    val paths = (1 to 3).map { d =>
+      val p = s"$dir/d$d.grb2"
+      graft.sources.grib.GribFormat.writeFile(spark, p, Seq(
+        (61, ts(f"2024-03-$d%02dT00:00:00"), Seq(0.0, 1.0), Seq(0.0, 1.0),
+          Array.fill(4)(d.toDouble))), edition = 2)
+      p
+    }
+    val df = Manifest.multiScan(spark, paths)
+    assert(df.agg(sum("value")).head().getDouble(0) == 4.0 * (1 + 2 + 3))
+    assert(!df.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]))
+    val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    assert(scans.length == 1, df.queryExecution.executedPlan.toString)
+    assert(scans.head.scan.description().contains("messages=3/3"))
+  }
+
+  test("multiScan and the manager's input guard refuse a mixed-format list by name") {
+    val dir = Files.createTempDirectory("multiscan_mixed").toString
+    Seq((1, "a")).toDF("k", "v").write.parquet(s"$dir/p1")
+    Files.write(Paths.get(s"$dir/t.tif"), graft.sources.tiff.TiffFormat.write(
+      2, 2, Array(Array(1.0, 2.0, 3.0, 4.0)), 3, 64, 0, 2, 1.0, 1.0,
+      graft.sources.tiff.TiffFormat.WriteOpts()))
+    val e = intercept[IllegalArgumentException](
+      Manifest.multiScan(spark, Seq(s"$dir/p1", s"$dir/t.tif")))
+    assert(e.getMessage.contains("mixes input formats geotiff, parquet"), e.getMessage)
+    assert(Manifest.formatOf("a.tif") == "geotiff")
+    assert(Manifest.formatOf("a.grb2") == "grib1")
+    assert(Manifest.formatOf("a.nc") == "netcdf")
+    assert(Manifest.formatOf("a.parquet") == "parquet")
+  }
+
   test("retryWithBackoff: exponential delays, fatal short-circuits") {
     var delays = Vector.empty[Long]
     var calls = 0

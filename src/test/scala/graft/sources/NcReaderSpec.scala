@@ -180,19 +180,21 @@ class NcReaderSpec extends SparkSpec {
     assert(maxT2m == 11 * 1000 + 2 * 100 + 3)
   }
 
-  test("splitBytes fans a single file out across partitions along time") {
+  test("the split budget fans a single file out across partitions along time") {
     val dir = Files.createTempDirectory("nc6").toString
     writeGrid(s"$dir/a.nc", nt = 8)
     // one record = 3*4*(8+4) bytes = 144 → 2 records per 300-byte split
-    val df = spark.read.format("netcdf").option("splitBytes", "300").load(s"$dir/a.nc")
-    assert(df.rdd.getNumPartitions == 4)
-    assert(df.count() == 8 * 3 * 4)
-    // a time filter narrows the outer range before splitting
-    val filtered = spark.read.format("netcdf").option("splitBytes", "300")
-      .load(s"$dir/a.nc")
-      .filter(col("time") >= lit(ts("2024-03-01T06:00:00")))
-    assert(filtered.rdd.getNumPartitions == 1)
-    assert(filtered.count() == 2 * 3 * 4)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "300")
+    try {
+      val df = spark.read.format("netcdf").load(s"$dir/a.nc")
+      assert(df.rdd.getNumPartitions == 4)
+      assert(df.count() == 8 * 3 * 4)
+      // a time filter narrows the outer range before splitting
+      val filtered = spark.read.format("netcdf").load(s"$dir/a.nc")
+        .filter(col("time") >= lit(ts("2024-03-01T06:00:00")))
+      assert(filtered.rdd.getNumPartitions == 1)
+      assert(filtered.count() == 2 * 3 * 4)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("fixed-size (no record dim) files scan identically") {
@@ -372,6 +374,31 @@ class NcReaderSpec extends SparkSpec {
     try {
       q.processAllAvailable() // nothing yet — must not throw
       assert(counts.get() == 0)
+      writeGrid(s"$dir/a.nc", nt = 2)
+      q.processAllAvailable()
+      assert(counts.get() == 2 * 3 * 4)
+    } finally q.stop()
+  }
+
+  test("a stream attached to a landing dir that does not exist yet waits, then ingests") {
+    val root = Files.createTempDirectory("ncstream_notyet").toString
+    val dir = s"$root/landing" // created only when the first file lands
+    val probe = Files.createTempDirectory("ncstream_notyet_probe").toString
+    writeGrid(s"$probe/schema_probe.nc", nt = 1)
+    val schema = spark.read.format("netcdf").load(probe).schema
+    val counts = new java.util.concurrent.atomic.AtomicLong(0)
+    val q = spark.readStream.format("netcdf").schema(schema).load(dir)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        counts.addAndGet(df.count()); ()
+      }
+      .option("checkpointLocation",
+        Files.createTempDirectory("ncstream_notyet_ckpt").toString)
+      .start()
+    try {
+      q.processAllAvailable() // the dir is missing — must not throw
+      assert(counts.get() == 0)
+      new java.io.File(dir).mkdirs()
       writeGrid(s"$dir/a.nc", nt = 2)
       q.processAllAvailable()
       assert(counts.get() == 2 * 3 * 4)

@@ -70,10 +70,14 @@ class GribSplitSpec extends SparkSpec {
       }
     val sqlConf = org.apache.spark.sql.internal.SQLConf.get
     val maxPartitionBytes = sqlConf.filesMaxPartitionBytes // default 128 MB
+    def pack(ms: Seq[(String, GribFormat.GribMessage)]) =
+      graft.sources.SplitBudget.pack(ms, (m: GribFormat.GribMessage) => m.dataBytes.toLong,
+        graft.sources.SplitBudget.maxSplitBytes(ms.map(_._2.dataBytes.toLong).sum,
+          ms.map(_._1).distinct.size))
     val million = msgs(nFiles = 1000, perFile = 1000, dataBytes = 128 * 1024)
-    val packed = GribSplit.pack(million)
+    val packed = pack(million)
     val totalBytes = 1000L * 1000L * 128 * 1024 +
-      1000L * graft.sources.SplitBudget.openCostInBytes
+      1000L * sqlConf.filesOpenCostInBytes
     val ideal = (totalBytes + maxPartitionBytes - 1) / maxPartitionBytes
     // every split holds many messages; count within 2x of the byte ideal
     // (greedy packing + the never-cross-a-file rule cost at most one
@@ -86,7 +90,7 @@ class GribSplitSpec extends SparkSpec {
     assert(packed.forall(_._2.nonEmpty))
     // splits GROW with the data: 10x the messages, ~10x the splits
     val tenth = msgs(nFiles = 100, perFile = 1000, dataBytes = 128 * 1024)
-    val packedTenth = GribSplit.pack(tenth)
+    val packedTenth = pack(tenth)
     val growth = packed.size.toDouble / packedTenth.size
     assert(growth > 5 && growth < 20,
       s"split count must track bytes: 10x data grew splits ${growth}x")

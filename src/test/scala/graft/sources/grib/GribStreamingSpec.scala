@@ -92,4 +92,44 @@ class GribStreamingSpec extends SparkSpec {
       assert(lastBatchBroadcast() == first)
     } finally q.stop()
   }
+
+  test("a trigger of k files plans the splits of a batch read of those k files") {
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, MicroBatchScanExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val dir = Files.createTempDirectory("gribstream_splits").toString
+    (1 to 4).foreach { f =>
+      GribFormat.writeFile(spark, s"$dir/f$f.grb2", (1 to 8).map { h =>
+        (61, LocalDateTime.of(2024, 10, f, h, 0), Seq(0.0, 1.0), Seq(0.0, 1.0),
+          Array.tabulate(4)(i => f * 100.0 + h * 10 + i))
+      }, edition = 2)
+    }
+    def splits(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]) =
+      parts.map { case p: GribInputPartition => (p.path, p.messages.length) }
+    // a near-zero open cost makes the budget track the planned bytes: one
+    // file budgeted alone splits in four, four files budgeted together
+    // leave each file one split
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    spark.conf.set("spark.sql.files.minPartitionNum", "4")
+    try {
+      val batch = splits(spark.read.format("grib1").load(dir)
+        .queryExecution.executedPlan
+        .collectFirst { case b: BatchScanExec => b.inputPartitions }.get)
+      assert(batch.map(_._2).sum == 4 * 8)
+      val q = spark.readStream.format("grib1").load(dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation",
+          Files.createTempDirectory("gribstream_splits_ckpt").toString)
+        .start()
+      try {
+        q.processAllAvailable()
+        val streamed = splits(q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+          .collectFirst { case s: MicroBatchScanExec => s.inputPartitions }.get)
+        assert(streamed == batch)
+      } finally q.stop()
+    } finally {
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
+  }
 }

@@ -19,11 +19,12 @@ class TiffSplitSpec extends SparkSpec {
       TiffFormat.write(w, h, Array(vals), 3, 64, -20.0, 50.0, 0.5, 0.5,
         WriteOpts(tileSize = 16)))
     val df = spark.read.format("geotiff").load(s"$dir/t.tif")
-    // 16 tiny tiles pack under the open-cost quantum: at most two tasks
-    // (the first split absorbs the per-file open-cost charge — Spark's
-    // FilePartition boundary arithmetic), never 16 (pre-r15 behavior)
+    // 16 tiny tiles pack under the open-cost quantum: one task, never 16
+    // (pre-r15 behavior). The per-file open cost sizes the budget but is
+    // not charged into the file's first split, which it would otherwise
+    // fill on its own.
     val parts = df.rdd.getNumPartitions
-    assert(parts <= 2, s"expected <=2 packed splits for 16 tiny tiles, got $parts")
+    assert(parts == 1, s"expected 1 packed split for 16 tiny tiles, got $parts")
     // every tile's pixels survive the multi-tile reader
     assert(df.count() == w.toLong * h)
     val sum = df.agg(org.apache.spark.sql.functions.sum("value"))
@@ -41,8 +42,10 @@ class TiffSplitSpec extends SparkSpec {
           WriteOpts(tileSize = 16)))
     }
     val df = spark.read.format("geotiff").load(dir)
+    // exactly one split per file: a split never spans files, and each
+    // file fits one budget
     val parts = df.rdd.getNumPartitions
-    assert(parts >= 2 && parts <= 4, s"got $parts")
+    assert(parts == 2, s"got $parts")
     assert(df.count() == 2L * 32 * 32)
   }
 }

@@ -87,4 +87,43 @@ class TiffStreamingSpec extends SparkSpec {
         Seq(W * H.toLong, W * H.toLong, W * H.toLong))
     } finally q.stop()
   }
+
+  test("a trigger of k files plans the splits of a batch read of those k files") {
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, MicroBatchScanExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val dir = Files.createTempDirectory("tifstream_splits").toString
+    (1 to 4).foreach { f =>
+      Files.write(Paths.get(s"$dir/f$f.tif"),
+        TiffFormat.write(64, 64, Array(Array.tabulate(64 * 64)(i => f * 1e4 + i)),
+          3, 64, 0, 64, 1.0, 1.0, TiffFormat.WriteOpts(tileSize = 16)))
+    }
+    def splits(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]) =
+      parts.map { case p: TiffInputPartition => (p.path, p.tiles.length) }
+    // a near-zero open cost makes the budget track the planned bytes: one
+    // file budgeted alone splits in four, four files budgeted together
+    // leave each file one split
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    spark.conf.set("spark.sql.files.minPartitionNum", "4")
+    try {
+      val batch = splits(spark.read.format("geotiff").load(dir)
+        .queryExecution.executedPlan
+        .collectFirst { case b: BatchScanExec => b.inputPartitions }.get)
+      assert(batch.map(_._2).sum == 4 * 16)
+      val q = spark.readStream.format("geotiff").load(dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation",
+          Files.createTempDirectory("tifstream_splits_ckpt").toString)
+        .start()
+      try {
+        q.processAllAvailable()
+        val streamed = splits(q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+          .collectFirst { case s: MicroBatchScanExec => s.inputPartitions }.get)
+        assert(streamed == batch)
+      } finally q.stop()
+    } finally {
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
+  }
 }

@@ -119,5 +119,14 @@ class ZarrScanSpec extends SparkSpec {
       if (i == 6) assert(r.isNullAt(r.fieldIndex("v")), "fill cell must be null")
       else assert(r.getAs[Double]("v") == i * 10.0, s"cell $i")
     }
+    // description() and planInputPartitions() share one planning pass:
+    // chunk refs resolve once per scan, not once per call
+    val scan = spark.read.format("zarr").load(dir).queryExecution.executedPlan
+      .collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      }.get
+    val parts = scan.toBatch.planInputPartitions()
+    assert(scan.description().contains("chunksRead: 6"))
+    assert(scan.toBatch.planInputPartitions() eq parts)
   }
 }
